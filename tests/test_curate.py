@@ -878,3 +878,35 @@ def test_curate_span_floor_validated_in_preamble(spark, monkeypatch):
         with pytest.raises(ValueError, match="winnow geometry floor"):
             curate(docs, **kw)
     assert calls == []
+
+
+def test_curate_error_path_releases_persisted_frames(spark, monkeypatch):
+    """A gate raising mid-funnel leaks no persisted frame: the shingle
+    cache and the winnow cache (warmed by overlapped count jobs) are
+    released on the error path, like on success."""
+    import time
+
+    from tikv_data_compare_spark.operators import text as tx
+
+    sc = spark.sparkContext
+
+    def persistent_rdds():
+        # let any in-flight warm-up job start, finish and register its
+        # cache: wait for a 5 s window with no active job
+        deadline = time.time() + 120
+        quiet_since = time.time()
+        while time.time() < deadline and time.time() - quiet_since < 5:
+            if sc.statusTracker().getActiveJobsIds():
+                quiet_since = time.time()
+            time.sleep(0.2)
+        return set(sc._jsc.getPersistentRDDs().keys())
+
+    before = persistent_rdds()
+
+    def failing_gate(*a, **kw):
+        raise RuntimeError("injected gate failure")
+
+    monkeypatch.setattr(tx, "repetition_stats", failing_gate)
+    with pytest.raises(RuntimeError, match="injected gate failure"):
+        curate(_docs(spark), self_dedup_trim_span=24)
+    assert persistent_rdds() <= before

@@ -121,29 +121,60 @@ def test_compare_join_strategy_is_sort_merge(spark, orders_keyed):
 
 def test_range_buckets_balanced_under_skew(spark):
     """Fixed-divisor bucketing collapses under key skew; quantile boundaries
-    keep buckets ~equal-count on a heavily skewed key space."""
+    keep every bucket as balanced as the key's ties allow.
+
+    With tied keys no method reaches exactly n/16 per bucket: a cut can only
+    fall between two distinct key values.  The bound is computed from the
+    keys themselves: a boundary within the sketch's rank error
+    (``rel_err * n``) of the ideal cut rank puts the bucket edge between
+    the tie groups at ranks ``r - m - 1`` and ``r + m``, and each bucket
+    size must lie between the nearest and farthest such edges."""
+    import math
+
     from tikv_data_compare_spark.operators.checksum import (
         range_bucket_boundaries,
         range_bucket_col,
     )
 
-    # zipf-ish: k = floor(2^(i/1000)) over 8000 rows — 6 decades of skew
-    df = spark.range(8000).select(
+    # zipf-ish: k = floor(2^(i/250)) over 8000 rows — ~32 doublings of skew
+    n, n_buckets, rel_err = 8000, 16, 0.001
+    df = spark.range(n).select(
         F.floor(F.pow(F.lit(2.0), F.col("id") / 250.0)).alias("k")
     )
-    bounds = range_bucket_boundaries(df, "k", n_buckets=16)
-    sizes = [
-        r["n"]
-        for r in df.withColumn("b", range_bucket_col("k", bounds))
+    bounds = range_bucket_boundaries(df, "k", n_buckets=n_buckets, rel_err=rel_err)
+    assert len(bounds) == n_buckets - 1
+    got = dict(
+        df.withColumn("b", range_bucket_col("k", bounds))
         .groupBy("b")
         .agg(F.count(F.lit(1)).alias("n"))
         .collect()
-    ]
-    ideal = 8000 // 16
-    assert len(sizes) >= 12  # near the requested 16 (dupes may merge a few)
-    assert max(sizes) <= 1.25 * ideal and min(sizes) >= 0.8 * ideal  # balanced
+    )
+    keys = sorted(math.floor(2.0 ** (i / 250.0)) for i in range(n))
+
+    def below(v):  # number of keys < v
+        lo, hi = 0, n
+        while lo < hi:
+            mid = (lo + hi) // 2
+            if keys[mid] < v:
+                lo = mid + 1
+            else:
+                hi = mid
+        return lo
+
+    m = math.ceil(rel_err * n)
+    # achievable edge interval for each cut (edges 0 and n are fixed)
+    edges = [(0, 0)] + [
+        (below(keys[max(0, j * n // n_buckets - m - 1)]),
+         below(keys[min(n - 1, j * n // n_buckets + m)]))
+        for j in range(1, n_buckets)
+    ] + [(n, n)]
+    for b in range(n_buckets):
+        lo = edges[b + 1][0] - edges[b][1]
+        hi = edges[b + 1][1] - edges[b][0]
+        assert lo <= got.get(b, 0) <= hi, (b, got.get(b, 0), lo, hi)
     # the fixed-divisor strawman on the same data fails BOTH ways: a hot
     # bucket several times ideal AND a sparse explosion of tiny buckets
+    ideal = n // n_buckets
     naive = df.select((F.col("k") / 1000).cast("long").alias("b")).groupBy("b").count()
     naive_sizes = sorted((r["count"] for r in naive.collect()), reverse=True)
     assert naive_sizes[0] >= 4 * ideal

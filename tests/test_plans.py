@@ -670,3 +670,69 @@ def test_self_dedup_trim_plan_shape(spark, documents):
         s3 = plans.plan_string(df3)
         assert "CartesianProduct" not in s3
         assert "LeftSemi" in s3, "later_ids restriction lost its semi join"
+
+
+def _span_corpus(spark, n, offset=0):
+    """``n`` synthetic docs sharing template spans, built with
+    createDataFrame: with n >= 32 rows the local scan already has
+    defaultParallelism partitions at every tested core count, so
+    ``session.scale_out`` is a no-op and every Exchange in a span
+    operator's plan is the operator's own."""
+    templates = (
+        "licensed under the apache license version two point zero",
+        "the quick brown fox jumps over the lazy dog near the river",
+        "all rights reserved no part of this text may be reproduced",
+    )
+    return spark.createDataFrame(
+        [
+            (i + offset, f"doc {i} {templates[i % 3]} tail {i * 7919 % 1000}")
+            for i in range(n)
+        ],
+        "doc_id long, text string",
+    )
+
+
+def test_span_family_exchange_counts(spark):
+    """Plan-shape pins for the exact-substring operators: the Exchange
+    count of every public operator, uncapped and with the hot-fingerprint
+    split (``max_fp_df``), in the formatted plan (which prints each node
+    twice).  A changed count means the shared span-match core moved a
+    shuffle or a broadcast."""
+    from tikv_data_compare_spark.operators import text as tx
+
+    docs = _span_corpus(spark, 64)
+    probes = _span_corpus(spark, 32, offset=1000).withColumnRenamed(
+        "doc_id", "probe_id"
+    )
+    ops = {
+        "decontaminate_substring": lambda **kw: tx.decontaminate_substring(
+            docs, probes, min_span=24, **kw
+        ),
+        "decontaminate_substring/verdict": lambda **kw: tx.decontaminate_substring(
+            docs, probes, min_span=24, verdict_only=True, **kw
+        ),
+        "self_dedup_substring": lambda **kw: tx.self_dedup_substring(
+            docs, min_span=24, **kw
+        ),
+        "self_dedup_kept": lambda **kw: tx.self_dedup_kept(docs, min_span=24, **kw),
+        "self_dedup_trim": lambda **kw: tx.self_dedup_trim(docs, min_span=24, **kw),
+        "self_dedup_trim/word": lambda **kw: tx.self_dedup_trim(
+            docs, min_span=24, snap="word", **kw
+        ),
+    }
+    # (uncapped, max_fp_df=2)
+    expected = {
+        "decontaminate_substring": (12, 40),
+        "decontaminate_substring/verdict": (12, 40),
+        "self_dedup_substring": (16, 64),
+        "self_dedup_kept": (16, 66),
+        "self_dedup_trim": (16, 66),
+        "self_dedup_trim/word": (16, 66),
+    }
+    got = {
+        name: tuple(
+            plans.plan_string(op(max_fp_df=cap)).count("Exchange") for cap in (None, 2)
+        )
+        for name, op in ops.items()
+    }
+    assert got == expected

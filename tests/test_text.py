@@ -773,11 +773,10 @@ def test_winnow_doc_fps_reuse_seam(spark, documents):
 
 
 def test_decontaminate_substring_max_fp_df_cap(spark, documents):
-    """r16 hot-fingerprint handling: the default rekey mode is EXACT at any
-    threshold — even max_fp_df=1, which marks nearly every fingerprint hot
-    and routes almost the whole corpus through the gram re-key path — while
-    legacy drop mode can only shrink the flagged set, and a zero/negative
-    threshold raises (loud-validation, ADVICE r15)."""
+    """Hot-fingerprint handling is EXACT at any threshold — even
+    max_fp_df=1, which marks nearly every fingerprint hot and routes almost
+    the whole corpus through the gram re-key path — and a zero/negative
+    threshold raises."""
     import pytest
 
     docs = documents.limit(40).select("doc_id", "text").cache()
@@ -799,33 +798,9 @@ def test_decontaminate_substring_max_fp_df_cap(spark, documents):
             ).collect()
         }
         assert rekey == exact, f"rekey mode diverged from exact at cap={cap}"
-    # legacy drop mode: recall-lossy by design — flagged set only shrinks
-    dropped = {
-        r["doc_id"]
-        for r in tx.decontaminate_substring(
-            docs, probes, min_span=24, max_fp_df=1, hot_fp_mode="drop"
-        ).collect()
-        if r["contaminated"]
-    }
-    assert dropped <= {r[0] for r in exact if r[2]}
-    # r19 verdict_only composes with drop mode (no hot path there — the
-    # projection must still match the full drop run's verdict column)
-    vo_drop = {
-        r["doc_id"]
-        for r in tx.decontaminate_substring(
-            docs, probes, min_span=24, max_fp_df=1, hot_fp_mode="drop",
-            verdict_only=True,
-        ).collect()
-        if r["contaminated"]
-    }
-    assert vo_drop == dropped
     for bad in (0, -5):
         with pytest.raises(ValueError, match="max_fp_df"):
             tx.decontaminate_substring(docs, probes, min_span=24, max_fp_df=bad)
-    with pytest.raises(ValueError, match="hot_fp_mode"):
-        tx.decontaminate_substring(
-            docs, probes, min_span=24, max_fp_df=2, hot_fp_mode="rekeyed"
-        )
     docs.unpersist()
 
 
@@ -970,10 +945,10 @@ def test_bpe_vocab_decodes_ids(spark):
 
 
 def test_substring_rekey_catches_hot_only_pairs(spark):
-    """The adversarial case for the r15 drop cap — a pair whose ONLY shared
-    content is boilerplate hot enough to exceed the threshold.  Drop mode
-    provably misses it (the documented recall hole, wrong direction for a
-    safety gate); r16 rekey mode must flag it, byte-identical to uncapped.
+    """The adversarial case for a hot-fingerprint threshold — a pair whose
+    ONLY shared content is boilerplate hot enough to exceed it.  Merely
+    dropping hot fingerprints would miss such pairs; the gram re-key path
+    must flag them, byte-identical to uncapped.
     """
     import random
 
@@ -1002,20 +977,6 @@ def test_substring_rekey_catches_hot_only_pairs(spark):
         for r in tx.self_dedup_substring(df, min_span=24, max_fp_df=5).collect()
     }
     assert rekey == exact
-    dropped_mode = {
-        r["doc_id"]: r["kept"]
-        for r in tx.self_dedup_substring(
-            df, min_span=24, max_fp_df=5, hot_fp_mode="drop"
-        ).collect()
-    }
-    # drop mode MISSES license carriers (their span-interior fps are all
-    # hot; only pad-boundary-straddling windows yield rare fps, catching a
-    # few pairs) — the recall hole rekey exists to close.  If the missed
-    # set ever goes empty the fixture no longer exercises the hole.
-    missed = {d for d, kp in dropped_mode.items() if kp} - {
-        d for d, kp in exact.items() if kp
-    }
-    assert missed, "drop mode caught everything — fixture no longer adversarial"
 
     # decontamination flavor of the same trap: probe = the license text
     probes = spark.createDataFrame(
@@ -1042,15 +1003,6 @@ def test_substring_rekey_catches_hot_only_pairs(spark):
         ).collect()
     }
     assert dec_vo == dec_exact
-    dec_drop = {
-        r["doc_id"]: r["contaminated"]
-        for r in tx.decontaminate_substring(
-            df, probes, min_span=24, max_fp_df=5, hot_fp_mode="drop"
-        ).collect()
-    }
-    assert sum(dec_drop.values()) < sum(dec_exact.values()), (
-        "drop mode caught every contaminated doc — fixture no longer adversarial"
-    )
 
 
 def test_self_dedup_substring_equals_bruteforce(spark, documents):
@@ -1112,16 +1064,6 @@ def test_self_dedup_substring_equals_bruteforce(spark, documents):
             for r in tx.self_dedup_substring(df, min_span=N, max_fp_df=cap).collect()
         }
         assert rekeyed == exp, f"rekey mode diverged from brute force at cap={cap}"
-
-    # legacy drop mode: flagged set can only SHRINK (recall trade)
-    capped = {
-        r["doc_id"]: r["kept"]
-        for r in tx.self_dedup_substring(
-            df, min_span=N, max_fp_df=2, hot_fp_mode="drop"
-        ).collect()
-    }
-    exact_flagged = {d for d, v in got.items() if not v[3]}
-    assert {d for d, kp in capped.items() if not kp} <= exact_flagged
 
     import pytest
     with pytest.raises(ValueError, match="min_span"):

@@ -151,13 +151,6 @@ def decode_ts(b: bytes) -> int:
     return (~int.from_bytes(b[:8], "big")) & _U64_MASK
 
 
-def decode_ts_from_key(key: bytes) -> int:
-    """Timestamp convention: the *last* 8 bytes of the key hold the inverted ts."""
-    if len(key) < 8:
-        raise ValueError("key too short for trailing timestamp")
-    return decode_ts(key[-8:])
-
-
 # ---------------------------------------------------------------- Spark surface
 
 

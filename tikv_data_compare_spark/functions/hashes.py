@@ -38,12 +38,6 @@ def crc64_xz(data: bytes) -> int:
     return crc ^ _MASK
 
 
-def _crc64_signed(data: bytes) -> int:
-    """crc64 as a signed 64-bit value (Spark LongType is signed)."""
-    v = crc64_xz(data)
-    return v - (1 << 64) if v >= (1 << 63) else v
-
-
 def crc64_pandas_udf():
     """Vectorized (Arrow-batched) crc64 over a binary column → LongType.
 
@@ -102,7 +96,3 @@ def crc64_pandas_udf():
         return out
 
     return crc64
-
-
-def register_hash_udfs(spark) -> None:
-    spark.udf.register("crc64", crc64_pandas_udf())

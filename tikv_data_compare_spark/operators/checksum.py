@@ -241,14 +241,17 @@ def range_bucket_boundaries(
     they produce a few giant buckets — and a giant bucket defeats
     ``targeted_diff``'s whole point, because one drifted row re-reads the
     giant range.  One ``approxQuantile`` pass (Greenwald–Khanna, fully
-    distributed, ``rel_err`` relative rank error) yields boundaries that
-    keep buckets balanced under ANY distribution.
+    distributed) puts each boundary within ``rel_err * n`` ranks of its
+    ideal cut.  Buckets are then as balanced as the key's ties allow: a
+    cut can only fall between two distinct values, so a heavily repeated
+    key still makes an uneven bucket.
 
-    REUSE CONTRACT: boundaries must be computed ONCE (from either side or
-    the union) and passed to BOTH sides / stored in the manifest's meta —
-    re-deriving them per side would bucket the sides differently and
-    report everything as drifted.  This is the same class of contract the
-    manifest's ``expect_meta`` already validates.
+    The boundaries depend on the input's partition count (the sketch
+    merges per-partition summaries), so a recomputation can return
+    slightly different cuts.  Compute them ONCE (from either side or the
+    union), pass the same list to BOTH sides, and store it in the
+    manifest's meta: re-deriving them per side would bucket the sides
+    differently and report everything as drifted.
     """
     import math
 

@@ -85,153 +85,90 @@ def curate(
 ) -> tuple[DataFrame, DataFrame]:
     """Run the full curation chain; see module docstring.
 
-    Thresholds are scaled ×10000 like every engine fraction.
-    ``redact_pii`` (r15) masks PII spans in the SURVIVORS' text with typed
-    placeholders (``text.pii_redact``) instead of dropping the documents —
-    a transform applied after the last gate, so the attrition funnel is
-    byte-identical to a non-redacting run.  ``probes``
-    enables the decontamination stage (docs with more than
-    ``max_contamination_hits`` overlapping n-grams are dropped);
-    ``decontam_span`` (r10) switches that stage to EXACT-substring
-    decontamination (``text.decontaminate_substring``, the GPT-3/LLaMA
-    criterion): any doc sharing a verbatim span of at least
-    ``decontam_span`` characters with a probe drops, regardless of
-    ``max_contamination_hits``; ``decontam_bloom_m_bits`` (r12) passes
-    through to that stage's Bloom prefilter mode for corpus-sized probe
-    sets (result identical — equivalence-tested on the operator).
-    ``decontam_max_fp_df`` (r15; EXACT since r16) passes the
-    hot-fingerprint threshold to BOTH span stages (exact decontamination
-    and, since r16, ``self_dedup_span``) — set it from the corpus's
-    fingerprint-df histogram when a candidate join dominates the funnel.
-    Since r16 the operators' default ``hot_fp_mode="rekey"`` makes the
-    verdicts byte-identical to uncapped at any threshold (hot
-    fingerprints are re-keyed at full span resolution, not dropped —
-    operator docstrings), so this is a pure performance knob here —
-    and on template/boilerplate-heavy corpora it is NOT optional in
-    practice: at sf1, the uncapped self-dedup winnow self-join was
-    killed at >15 min inside the funnel where the split costs ~90 s,
-    and uncapped decontamination costs 251 s where the split costs 26 s
-    (identical kept sets, probe_curate_sf1).
-    ``decontam_algo`` (r16) overrides the winnow gram hash for the
-    exact-substring stages ONLY (``md5i64``/``xxhash64``) — the verified
-    span verdicts are algo-independent (operator docstrings); default
-    None falls back to ``xxhash64`` (r18 — the throughput hash, ~2.2×
-    faster at sf1 with byte-identical verdicts; until r17 the fallback
-    inherited the near-dup ``algo``, so naive callers paid the md5 fold).
-    ``self_dedup_span`` (r16) appends a ``self_dedup_span`` stage — the
-    corpus-INTERNAL ExactSubstr pass (``text.self_dedup_substring``, Lee
-    et al. 2021): any doc sharing a verbatim span of at least that many
-    chars with a SMALLER-id doc drops (globally-first keep rule).  When
-    it equals ``decontam_span`` (and probes are given), the corpus is
-    winnowed ONCE and the persisted fingerprint frame feeds both stages
-    through their ``doc_fps=`` seams — one winnow pass in the plan
-    instead of two (plan-pinned; ~200 cpu-s per 50k docs at sf1 saved,
-    BASELINE.md r15 attribution).
-    ``self_dedup_trim_span`` (r17) is the span-SURGICAL sibling — a
-    TRANSFORM, not a gate (the ``redact_pii`` convention): survivors keep
-    their row with every verbatim span of at least that many chars shared
-    with a smaller-id doc CUT out of their text
-    (``text.self_dedup_trim``, Lee et al.'s removal mode), so the
-    attrition funnel is byte-identical to a non-trimming run.  The trim
-    reference is the full input corpus (duplicated content is duplicated
-    regardless of whether its earlier carrier survived); runs before PII
-    redaction; shares the winnow frame when its span matches the other
-    span stages' geometry and threads ``decontam_max_fp_df`` /
-    ``decontam_algo`` like them.  Both drop and trim may run (at the same
-    or different spans): drop removes whole near-copy docs, trim excises
-    what remains.  ``self_dedup_trim_snap`` (r18) is the operator's
-    ``snap`` knob — ``"word"`` extends each cut to whitespace boundaries
-    so the spliced training text never contains word fragments (operator
-    docstring for the exact rule); requires the trim span.
-    ``decontam_fuzzy_jaccard_c`` (r13) appends an INDEPENDENT
-    ``decontamination_fuzzy`` stage — the paraphrase-level screen
-    (``text.decontaminate_fuzzy``): docs whose shingle-set Jaccard with
-    any probe reaches the threshold drop; it composes WITH the exact
-    stages (published pipelines run both the verbatim and the fuzzy
-    criterion).  Docs the LSH candidate pass never surfaces keep (the
-    pii/decontamination default-keep convention — an unscreened doc is
-    not a confirmed leak).
-    ``algo`` selects the near-dup stage's shingle hash — ``md5i64``
-    (default, DuckDB-oracle checkable) or ``xxhash64`` (the throughput
-    path, same knob as the dedup/checksum operators); since r18 the span
-    stages take their hash from ``decontam_algo`` alone (above), no
-    longer from this knob.  The near-dup kept set is
-    algo-dependent (a different, equally valid LSH family); the
-    decontamination verdict is NOT (verbatim verify — operator docstring).  ``keep_langs``
-    (optional, like ``drop_pii``/``probes``) appends a ``language`` stage:
-    only docs whose stopword-overlap prediction (``text.lang_id``) is in
-    the list survive; a doc with no prediction (NULL/empty text) DROPS —
-    an unconfirmable language is not a confirmed one, matching the
-    core-gate convention rather than the pii/decontamination default-keep.
-    ``max_lm_nll_c`` (optional) appends a ``fluency`` stage — the
-    CCNet-style perplexity gate: docs whose mean bigram cost
-    (``text.ngram_lm_score``, scaled ×1e6) exceeds the cap drop, as do
-    unscoreable docs (< 2 words — same unconfirmable-drops convention);
-    ``lm_train`` optionally trains the LM on a CLEAN reference corpus
-    instead of the scored input (the CCNet setup: score web text with a
-    Wikipedia-trained model).
+    Thresholds are scaled ×10000 like every engine fraction.  Stages run in
+    the order of the arguments below; a doc missing from a screening
+    stage's output (e.g. NULL text) keeps, while a doc that a quality stage
+    cannot confirm drops.
 
-    ``dsir_target`` (r12) appends a ``dsir_quality`` stage — the learned
-    quality dimension: each doc's DSIR hashed-n-gram importance weight
-    against the target corpus (``sampling.dsir_weights``, integer-frozen
-    ×1e6 log units).  Two pivot modes: ``dsir_top_frac=q`` keeps the top
-    ``ceil(q·n)`` scored docs by weight (exact rank via the bucketed
-    global-index machinery, ties by id — the robust default for real
-    corpora, since raw log-weights shift with ``dsir_n_buckets`` and
-    corpus mix); otherwise the absolute
-    ``min_dsir_logw_c`` threshold applies (use when you've calibrated the
-    scale, e.g. from a ``dsir_weights`` quantile probe).  Zero-feature
-    docs drop either way (unconfirmable-drops convention).
+    ``drop_pii`` adds a ``pii`` stage.  ``redact_pii`` instead masks PII
+    spans in the survivors' text with typed placeholders
+    (``text.pii_redact``); it is a transform after the last gate, so the
+    attrition funnel is unchanged.
 
-    ``quality_seed`` (r16) appends a ``quality_classifier`` stage — the
-    model-based quality dimension (``sampling.quality_classifier``, the
-    fastText-style seed-vs-crawl filter of the GPT-3/LLaMA stacks): NB
-    hashed-n-gram bucket weights from the labeled split plus a
-    driver-trained logistic decision threshold on the length-normalized
-    score, all integer-frozen.  ``quality_crawl`` is the negative class
-    (default: the input corpus itself); docs keep when their mean
-    log-odds clears the TRAINED boundary, or — when ``min_quality_c`` is
-    given — the explicit ×1e6 threshold instead (the comparison
-    cross-multiplies, ``q_sum_c >= thr · q_n_feats``, so no division
-    enters the gate).  Zero-feature docs drop (unconfirmable-drops
-    convention).  This is the learned-classifier sibling of the
-    ``dsir_target`` gate: DSIR weights raw importance for RESAMPLING,
-    the classifier draws a calibrated keep/drop boundary.
-    ``quality_algo`` selects the classifier's FEATURE hash — ``md5i64``
-    (default, DuckDB-oracle checkable) or ``xxhash64``.  Measured at sf1
-    (BASELINE.md r17 A/B, tools/probe_quality_algo_sf1_runs.jsonl):
-    xxhash64 is ~12× faster at the operator (1.4 vs 16.6 s; 22 vs
-    436 cpu-s) and ~5× in-funnel (14.1 vs 74.6 s) — but the kept sets
-    are NOT interchangeable (29% of verdicts differ at near-equal keep
-    rates: a different hash family trains a different, equally valid
-    model), so the default stays oracle-checkable and the switch is an
-    explicit caller decision; prefer ``xxhash64`` in production when
-    DuckDB replay is not needed.
-    ``c4_rules`` (r10) appends a ``boilerplate`` stage — the C4 cleaning
-    heuristics (``text.c4_flags``): docs containing 'lorem ipsum' or a
-    curly brace drop, as do docs retaining fewer than
-    ``c4_min_kept_lines`` boilerplate-clean lines (terminal punctuation,
-    ≥3 words, no 'javascript'); NULL/empty docs drop (core-gate
-    convention).  ``blocked_sources`` (r10) appends a ``url_blocklist``
-    stage — the C4 badlist shape at provenance granularity: docs whose
-    ``source_col`` value is in the list drop (a doc with a NULL source
-    KEEPS — absence of provenance is not a blocklist hit, the
-    pii/decontamination default-keep convention).
+    ``probes`` adds a decontamination stage: docs with more than
+    ``max_contamination_hits`` shared n-grams drop (``text.contamination``).
+    With ``decontam_span`` the stage is EXACT instead
+    (``text.decontaminate_substring``): any doc sharing a verbatim span of
+    at least that many characters with a probe drops.
+    ``decontam_bloom_m_bits`` passes that operator's Bloom prefilter for
+    corpus-sized probe sets (same result).
 
-    The returned kept-docs DataFrame is **persisted** (its stage count
-    already materialized it; unpersisting would make the caller's first
-    action recompute the whole funnel).  The frame itself is the release
-    handle: call ``kept.unpersist()`` when done with it.  All other
-    intermediates and any operator-module broadcasts are released before
-    returning.
+    ``decontam_fuzzy_jaccard_c`` adds a ``decontamination_fuzzy`` stage
+    (``text.decontaminate_fuzzy``): docs whose shingle-set Jaccard with any
+    probe reaches the threshold drop.  It runs in addition to the verbatim
+    stage.
+
+    ``self_dedup_span`` adds a ``self_dedup_span`` stage, the
+    corpus-internal ExactSubstr pass of Lee et al. 2021
+    (``text.self_dedup_kept``): any doc sharing a verbatim span of at least
+    that many chars with a SMALLER-id doc drops.  ``self_dedup_trim_span``
+    is its span-surgical sibling (``text.self_dedup_trim``), a transform
+    rather than a gate: survivors keep their row with every such span cut
+    out of their text, the reference being the full input corpus.  It runs
+    before PII redaction.  ``self_dedup_trim_snap="word"`` widens each cut
+    to whitespace so no word is partly removed.
+
+    The span stages share one persisted winnow frame per distinct span.
+    ``decontam_max_fp_df`` is their hot-fingerprint threshold: the
+    verdicts are identical at any value, but on template-heavy corpora the
+    uncapped candidate joins are quadratic, so set it from the corpus's
+    fingerprint-frequency histogram.  ``decontam_algo`` is their winnow
+    hash (default ``xxhash64``; ``md5i64`` is DuckDB-replayable); the span
+    verdicts do not depend on it.
+
+    ``algo`` is the near-dup stage's shingle hash: ``md5i64`` (default,
+    DuckDB-oracle checkable) or ``xxhash64``.  The near-dup kept set
+    depends on it (a different, equally valid LSH family).
+
+    ``keep_langs`` adds a ``language`` stage: only docs whose predicted
+    language (``text.lang_id``) is listed survive.  ``max_lm_nll_c`` adds
+    a ``fluency`` stage (CCNet-style): docs whose mean bigram cost
+    (``text.ngram_lm_score``, ×1e6) exceeds the cap drop, as do docs with
+    fewer than 2 words; ``lm_train`` trains the model on a clean reference
+    corpus instead of the input.
+
+    ``dsir_target`` adds a ``dsir_quality`` stage: each doc's DSIR
+    importance weight against the target corpus
+    (``sampling.dsir_weights``, ×1e6 log units).  ``dsir_top_frac=q``
+    keeps the top ``ceil(q·n)`` scored docs (ties by id); otherwise
+    ``min_dsir_logw_c`` is an absolute threshold.  Zero-feature docs drop.
+
+    ``quality_seed`` adds a ``quality_classifier`` stage
+    (``sampling.quality_classifier``): an integer-frozen hashed-n-gram
+    classifier of seed versus crawl (default crawl: the input itself).
+    Docs keep when their mean log-odds clears the trained boundary, or
+    ``min_quality_c`` (×1e6) when given.  ``quality_algo`` is its feature
+    hash; the kept set depends on it, so ``md5i64`` (DuckDB-checkable)
+    stays the default and ``xxhash64`` is the faster explicit choice.
+
+    ``c4_rules`` adds a ``boilerplate`` stage (``text.c4_flags``): docs
+    with 'lorem ipsum', a curly brace, or fewer than ``c4_min_kept_lines``
+    clean lines drop.  ``blocked_sources`` adds a ``url_blocklist`` stage:
+    docs whose ``source_col`` is listed drop (NULL source keeps).
+
+    Returns ``(kept, attrition)``.  ``kept`` is **persisted** (already
+    materialized); call ``kept.unpersist()`` when done with it.  All other
+    caches and any operator-module broadcasts are released before
+    returning, and on an exception everything, ``kept`` included, is
+    released before it propagates.  Argument errors raise ``ValueError``
+    before any frame is built.
     """
     spark = docs.sparkSession
 
-    # ---- loud-validation preamble (r17, ADVICE) -------------------------
+    # ---- validation preamble ---------------------------------------------
     # EVERY cheap argument validation runs here, before any frame is built
-    # or persisted: a ValueError after shared_fps.persist() used to leak
-    # the persisted frame (no unpersist on the error path), and scattering
-    # the checks let one knob (decontam_algo) slip through silently.
+    # or persisted, so a bad argument never starts work; a knob that would
+    # be silently ignored raises too.
     if decontam_bloom_m_bits is not None and (
         probes is None or decontam_span is None
     ):
@@ -282,9 +219,8 @@ def curate(
             "fingerprints through the exact rekey split)"
         )
     if decontam_algo is not None and _no_span_stage:
-        # r17 (ADVICE): decontam_algo only feeds the exact-span winnow
-        # stages; with none configured it would be silently ignored —
-        # the caller believing the throughput hash ran when nothing did
+        # decontam_algo only feeds the exact-span winnow stages; with none
+        # configured it would be silently ignored
         raise ValueError(
             "decontam_algo requires a span stage — probes= AND "
             "decontam_span=, and/or self_dedup_span= / "
@@ -299,7 +235,7 @@ def curate(
     if keep_langs is not None:
         # normalize + validate: a typo'd or unknown code would otherwise
         # silently drop the ENTIRE corpus (isin never matches), and a bare
-        # string would explode into characters (r8 review).  Known codes
+        # string would explode into characters.  Known codes
         # are the classifier's stopword inventory.
         if isinstance(keep_langs, str):
             keep_langs = [keep_langs]
@@ -343,313 +279,158 @@ def curate(
             )
     # ---- end preamble: everything below may build and persist frames ----
 
-    # Every gate except near-dup is a PER-DOC-independent predicate, and the
-    # near-dup loser set only depends on the exact-survivor subset — so the
-    # whole funnel reduces to ONE narrow flags frame (id + one boolean per
-    # stage, conjoined in stage order) and ONE conditional aggregation for
-    # every attrition count.  The r5 shape (persist + count per stage) cost
-    # five materializations of progressively-filtered full-text frames;
-    # this one costs two jobs total (flag agg + kept materialization) and
-    # caches only (id, flags) — the 100 TB difference between shipping doc
-    # text per stage and shipping booleans.
-    exact_ids = dd.dedup_exact(docs, id_col, text_col).select(id_col)
-    # widen the scan BEFORE the semi-join (r18): the shingle hashing below
-    # is a heavy map over a broadcast-semi-join output, which inherits the
-    # scan's split count — and shingle_arrays' own scale_out correctly
-    # refuses to .rdd-probe a join-shaped frame (doing so executes the
-    # dedup aggregation eagerly under AQE; session.scale_out docstring)
-    from tikv_data_compare_spark.session import scale_out
-
-    exact_docs = scale_out(docs, key=id_col).join(exact_ids, id_col, "left_semi")
-    # cache the (id, shingles, shingle-hashes) projection: jaccard_pairs
-    # reads it in three branches (signatures + both sides of the verify
-    # join), and each would otherwise recompute the dedup-groupBy +
-    # semi-join subtree; caching the HASHES too means the md5 fold runs
-    # once per corpus instead of once per signature-reading branch
-    sh = dd.hashed_shingle_arrays(exact_docs, id_col, text_col, algo=algo).persist()
-    # materialize EAGERLY (r18): jaccard_pairs consumes this frame in three
-    # branches that AQE materializes as CONCURRENT query stages — lazily
-    # persisted, each raced the cache and recomputed the shingle+hash pass
-    # (the shared_fps race below, same mechanism, stage-API-measured).
-    # The warm-up counts run as OVERLAPPED jobs from a small thread pool
-    # (guide §2.6 — actions are only serial because the driver calls them
-    # serially); every future is joined before the first consumer's
-    # collect, so consumers still always see a warm cache.
+    # Every gate except near-dup is a per-doc predicate, and the near-dup
+    # loser set depends only on the exact-survivor subset, so the whole
+    # funnel is ONE narrow flags frame (id + one boolean per stage,
+    # conjoined in stage order) and ONE conditional aggregation for every
+    # attrition count; only (id, flags) is kept, never per-stage text.
     from concurrent.futures import ThreadPoolExecutor
 
-    _warm_pool = ThreadPoolExecutor(max_workers=2)
-    # exception-safe pool lifetime (r19, ADVICE r18): anything raising
-    # between pool creation and shutdown used to leak the non-daemon
-    # worker threads and any in-flight warm-up jobs (driver exit then
-    # blocked on thread join while orphaned counts kept running)
+    from tikv_data_compare_spark.session import scale_out
+
+    # span stages' winnow hash: xxhash64 unless pinned (the span verdicts
+    # do not depend on it; md5i64 is the DuckDB-replayable gate hash)
+    da = decontam_algo if decontam_algo is not None else "xxhash64"
+    cached: list[DataFrame] = []
+    kept = None
+    done = False
+    # warm-up counts run as overlapped jobs; every future is joined before
+    # the first consumer's action, so consumers always see a warm cache
+    pool = ThreadPoolExecutor(max_workers=2)
+    warm: list = []
+
+    def _cache(df: DataFrame) -> DataFrame:
+        # materialized EAGERLY: a lazily persisted frame read by several
+        # subtrees of one job races the cache (AQE runs those query stages
+        # concurrently) and each stage recomputes it
+        df = df.persist()
+        cached.append(df)
+        warm.append(pool.submit(df.count))
+        return df
+
     try:
-        _warm_futs = [_warm_pool.submit(sh.count)]
+        exact_ids = dd.dedup_exact(docs, id_col, text_col).select(id_col)
+        # widen the scan BEFORE the semi-join: the shingle hashing below is
+        # a heavy map over the semi-join output, which keeps the scan's
+        # split count (session.scale_out docstring)
+        exact_docs = scale_out(docs, key=id_col).join(exact_ids, id_col, "left_semi")
+        # jaccard_pairs reads the (id, shingles, hashes) projection in three
+        # branches; caching it runs the shingle hash once per corpus
+        sh = _cache(dd.hashed_shingle_arrays(exact_docs, id_col, text_col, algo=algo))
+        # one persisted winnow frame per distinct span, shared by every span
+        # stage of that geometry through the operators' doc_fps= seams (the
+        # operators read it in up to four subtrees)
+        span_fps: dict[int, DataFrame] = {}
+        for span in (
+            decontam_span if probes is not None else None,
+            self_dedup_span,
+            self_dedup_trim_span,
+        ):
+            if span is not None and int(span) not in span_fps:
+                span_fps[int(span)] = _cache(tx.winnow_fingerprints(
+                    docs, id_col, text_col, k=5, w=int(span) - 4, algo=da,
+                ))
         losers = (
             dd.jaccard_pairs(exact_docs, id_col, text_col, algo=algo, shingles=sh)
             .filter(F.col("jaccard_c") >= near_dup_jaccard_c)
             .select(F.col("doc_b").alias(id_col))
             .distinct()
         )
-        q = tx.quality_flags(docs, id_col, text_col).select(id_col, "keep")
-        r = tx.repetition_stats(docs, id_col, text_col).select(
-            id_col,
+        # (stage name, (id, ok) frame, verdict for a doc missing from the
+        # frame), in funnel order.  Frames are LEFT-joined: an explode-based
+        # stage emits no row for a NULL/empty-text doc, and an inner join
+        # would erase it from every count.  Screens of a doc against
+        # something else keep such docs (an unscreened doc is not a
+        # confirmed hit); confirmations of the doc itself drop them.
+        gates = [
+            ("exact_dedup", exact_ids.select(id_col, F.lit(True)), False),
+            ("near_dedup", losers.select(id_col, F.lit(False)), True),
             (
-                (F.col("dup_word_frac_c") <= max_dup_word_frac_c)
-                & (F.col("top_bigram_frac_c") <= max_top_bigram_frac_c)
-            ).alias("_rep_ok"),
-        )
-
-        # Per-doc gate frames are LEFT-joined: an explode-based stage emits no
-        # row for a NULL/empty-text doc (split(NULL) explodes to nothing), and an
-        # inner join would erase such docs from every funnel count — n_in of
-        # exact_dedup would no longer equal the input doc count.  A missing gate
-        # row coalesces to "dropped at that stage" instead (r7, ADVICE).
-        q_ok = F.coalesce(F.col("keep") == 1, F.lit(False))
-        rep_ok = F.coalesce(F.col("_rep_ok"), F.lit(False))
-        flags = (
-            docs.select(id_col)
-            .join(exact_ids.withColumn("_e", F.lit(1)), id_col, "left")
-            .join(losers.withColumn("_l", F.lit(1)), id_col, "left")
-            .join(q, id_col, "left")
-            .join(r, id_col, "left")
-            .select(
-                id_col,
-                (F.col("_e") == 1).alias("s_exact"),
-                ((F.col("_e") == 1) & F.col("_l").isNull()).alias("s_near"),
-                ((F.col("_e") == 1) & F.col("_l").isNull() & q_ok).alias("s_quality"),
-                (
-                    (F.col("_e") == 1)
-                    & F.col("_l").isNull()
-                    & q_ok
-                    & rep_ok
-                ).alias("s_rep"),
-            )
-        )
-        stage_cols = ["s_exact", "s_near", "s_quality", "s_rep"]
-        stage_names = ["exact_dedup", "near_dedup", "quality", "repetition"]
+                "quality",
+                tx.quality_flags(docs, id_col, text_col).select(id_col, F.col("keep") == 1),
+                False,
+            ),
+            (
+                "repetition",
+                tx.repetition_stats(docs, id_col, text_col).select(
+                    id_col,
+                    (F.col("dup_word_frac_c") <= max_dup_word_frac_c)
+                    & (F.col("top_bigram_frac_c") <= max_top_bigram_frac_c),
+                ),
+                False,
+            ),
+        ]
         if drop_pii:
-            pii_ok = tx.pii_counts(docs, id_col, text_col).select(
-                id_col, (F.col("has_pii") == 0).alias("_pii_ok")
-            )
-            flags = flags.join(pii_ok, id_col, "left").withColumn(
-                "s_pii", F.col(stage_cols[-1]) & F.coalesce(F.col("_pii_ok"), F.lit(True))
-            )
-            stage_cols.append("s_pii")
-            stage_names.append("pii")
-        # one winnow pass for both span stages (r16, VERDICT r15 task 6): when
-        # the exact-decontam and self-dedup stages run at the SAME span, the
-        # corpus fingerprint frame is computed once, persisted, and passed to
-        # both operators through their doc_fps= seams (geometry is re-verified
-        # by the frame's metadata stamp inside each operator).  k mirrors both
-        # operators' default; the frame is released after the funnel counts
-        # materialize, with the other curate caches.
-        _sd_k = 5
-        # r18 (VERDICT r17 task 1): the span stages' fallback hash is xxhash64,
-        # decoupled from the near-dup ``algo`` — the span verdicts are
-        # algo-independent (operator docstrings) and xxhash64 measured ~2.2×
-        # faster at sf1, so the throughput hash is the right default for every
-        # caller who didn't pin one; pass decontam_algo="md5i64" to reproduce
-        # the DuckDB-replayable gate path.
-        da = decontam_algo if decontam_algo is not None else "xxhash64"
-        # Persist whenever ANY span stage runs, not only when both share a
-        # geometry: with max_fp_df set, decontaminate_substring consumes the
-        # corpus winnow subtree in three places (hot-df aggregate, affected-id
-        # semi-join, cold side) — an unpersisted frame would recompute the
-        # ~200-cpu-s/50k-doc HOF chain per consumer.
-        shared_fps = None
-        fps_span = None
-        if probes is not None and decontam_span is not None:
-            fps_span = int(decontam_span)
-        elif self_dedup_span is not None:
-            fps_span = int(self_dedup_span)
-        elif self_dedup_trim_span is not None:
-            fps_span = int(self_dedup_trim_span)
-        if fps_span is not None:
-            shared_fps = tx.winnow_fingerprints(
-                docs, id_col, text_col,
-                k=_sd_k, w=fps_span - _sd_k + 1, algo=da,
-            ).persist()
-            # materialize EAGERLY (r18): the span stages consume this frame in
-            # up to four subtrees of ONE job, and AQE materializes those query
-            # stages CONCURRENTLY — racing the lazy cache, each stage computed
-            # the full winnow itself (measured via the stage API: ~6 winnow
-            # executions of 4-9 cpu-s inside a single kept-count job).  One
-            # bounded count warms the cache; it overlaps the shingle warm-up
-            # in the pool above and is joined before the funnel agg runs.
-            _warm_futs.append(_warm_pool.submit(shared_fps.count))
-        # r17 (ADVICE): a span stage whose geometry DIFFERS from the shared
-        # frame's gets its OWN persisted winnow — the operators consume their
-        # doc_fps subtree in up to three places (the self-join's two sides;
-        # with max_fp_df also the hot-df aggregate + affected-id semi-join),
-        # and an unpersisted frame recomputes the ~200-cpu-s/50k-doc HOF
-        # chain per consumer.  All released with the other curate caches.
-        # r18 (ADVICE): memoized by span — with e.g. decontam_span=30 and
-        # self_dedup_span == self_dedup_trim_span == 20, the drop stage and
-        # the trim transform share ONE persisted span-20 frame instead of
-        # each building (and caching) an identical copy.
-        _own_fps: dict[int, "DataFrame"] = {}
-
-        def _fps_for(span: int):
-            span = int(span)
-            if shared_fps is not None and span == fps_span:
-                return shared_fps
-            f = _own_fps.get(span)
-            if f is None:
-                f = tx.winnow_fingerprints(
-                    docs, id_col, text_col,
-                    k=_sd_k, w=span - _sd_k + 1, algo=da,
-                ).persist()
-                # eager warm-up for the same AQE cache race as shared_fps
-                _warm_futs.append(_warm_pool.submit(f.count))
-                _own_fps[span] = f
-            return f
-
-        sd_fps = _fps_for(self_dedup_span) if self_dedup_span is not None else None
+            pii = tx.pii_counts(docs, id_col, text_col)
+            gates.append(("pii", pii.select(id_col, F.col("has_pii") == 0), True))
         if probes is not None:
-            # probe id column: the conventional 'probe_id' (the contamination
-            # contract), else any first column stands in — the id only keys the
-            # candidate-pair dedup.  Renamed DEFENSIVELY to '_probe_id' for
-            # EVERY probe-consuming stage: probes cut from the corpus itself
-            # carry the same 'doc_id' column as the docs side, and the
-            # candidate joins would hit an ambiguous-reference error (r10
-            # review; generalized from the exact-span branch in r13 when the
-            # fuzzy stage landed).
+            # probe id: 'probe_id' when present, else the first column; always
+            # renamed so probes cut from the corpus (same 'doc_id' column) do
+            # not make the candidate joins ambiguous
             pid = "probe_id" if "probe_id" in probes.columns else probes.columns[0]
             probes_n = probes.select(F.col(pid).alias("_probe_id"), F.col(text_col))
             if decontam_span is not None:
-                conta_ok = tx.decontaminate_substring(
+                conta = tx.decontaminate_substring(
                     docs, probes_n, id_col, text_col,
                     probe_id_col="_probe_id", probe_text_col=text_col,
                     min_span=int(decontam_span),
                     bloom_m_bits=decontam_bloom_m_bits,
-                    # the span stages' own hash knob (decontam_algo; r18
-                    # fallback xxhash64): the verified verdict is
-                    # algo-independent (operator docstring), so the throughput
-                    # path composes without touching results
                     algo=da,
-                    # hot-fingerprint threshold (r15): on template-heavy corpora
-                    # the exact-decontam candidate join otherwise dominates the
-                    # whole funnel (BASELINE.md r15 degeneracy measurement);
-                    # r16: the operator's rekey default keeps this EXACT at any
-                    # value; None = no split (the gate path)
                     max_fp_df=decontam_max_fp_df,
-                    doc_fps=shared_fps,
-                    # the gate consumes the verdict only (r19): the hot gram
-                    # join collapses to one row per distinct probe gram —
-                    # ``contaminated`` is byte-identical (operator contract)
+                    doc_fps=span_fps[int(decontam_span)],
                     verdict_only=True,
-                ).select(id_col, (~F.col("contaminated")).alias("_ct_ok"))
-                stage_name = "decontamination_exact"
+                ).select(id_col, ~F.col("contaminated"))
+                gates.append(("decontamination_exact", conta, True))
             else:
-                conta_ok = tx.contamination(
+                conta = tx.contamination(
                     docs, probes_n, id_col, text_col,
                     probe_id_col="_probe_id", probe_text_col=text_col,
-                ).select(
-                    id_col,
-                    (F.col("n_hit_grams") <= max_contamination_hits).alias("_ct_ok"),
-                )
-                stage_name = "decontamination"
-            flags = flags.join(conta_ok, id_col, "left").withColumn(
-                "s_conta", F.col(stage_cols[-1]) & F.coalesce(F.col("_ct_ok"), F.lit(True))
-            )
-            stage_cols.append("s_conta")
-            stage_names.append(stage_name)
+                ).select(id_col, F.col("n_hit_grams") <= max_contamination_hits)
+                gates.append(("decontamination", conta, True))
         if decontam_fuzzy_jaccard_c is not None:
-            # an independently appended stage: paraphrase-level overlap is a
-            # different criterion than the verbatim-span / n-gram stages, and
-            # published pipelines run both screens (probes_n: the shared
-            # defensively-renamed probe frame from the block above)
-            fuzzy_ok = tx.decontaminate_fuzzy(
+            # paraphrase-level overlap: a different criterion than the
+            # verbatim-span / n-gram stages, run in addition to them
+            fuzzy = tx.decontaminate_fuzzy(
                 docs, probes_n, id_col, text_col,
                 probe_id_col="_probe_id", probe_text_col=text_col,
                 threshold_bp=int(decontam_fuzzy_jaccard_c), algo=algo,
-            ).select(id_col, (~F.col("contaminated")).alias("_fz_ok"))
-            flags = flags.join(fuzzy_ok, id_col, "left").withColumn(
-                "s_fuzzy",
-                F.col(stage_cols[-1]) & F.coalesce(F.col("_fz_ok"), F.lit(True)),
-            )
-            stage_cols.append("s_fuzzy")
-            stage_names.append("decontamination_fuzzy")
+            ).select(id_col, ~F.col("contaminated"))
+            gates.append(("decontamination_fuzzy", fuzzy, True))
         if self_dedup_span is not None:
-            # corpus-internal ExactSubstr dedup (r16): globally-first keep rule
-            # — 'kept' is a definitive per-doc verdict (one row per input doc,
-            # short/NULL docs keep: no min_span span exists in them).
-            # r19 (VERDICT r18 task 3): this gate consumes ONLY `kept`, so it
-            # takes the partner-count-free variant — the hot gram join runs
-            # collapse_earlier (one min-carrier row per distinct gram instead
-            # of the full per-(carrier, gram) set) and the verdict reduces to
-            # a distinct dropped-id set.  kept is byte-identical to the full
-            # operator's column (parity-pinned in tests/test_text_selfdedup).
-            sd_ok = tx.self_dedup_kept(
+            # corpus-internal ExactSubstr, globally-first keep rule; the gate
+            # reads only `kept`, so it takes the kept-only operator
+            sd = tx.self_dedup_kept(
                 docs, id_col, text_col,
-                min_span=int(self_dedup_span), k=_sd_k,
-                algo=da, doc_fps=sd_fps,
-                # the shared hot-fingerprint threshold (r16): rekey mode is
-                # exact at any value, so threading it here only bounds the
-                # candidate join — omitting it was measured CATASTROPHIC on
-                # the sf1 template corpus (uncapped winnow self-join = the
-                # r15 5.37e9-candidate path, killed at >15 min inside the
-                # funnel, vs ~90 s with the split)
+                min_span=int(self_dedup_span), k=5,
+                algo=da, doc_fps=span_fps[int(self_dedup_span)],
                 max_fp_df=decontam_max_fp_df,
-            ).select(id_col, F.col("kept").alias("_sd_ok"))
-            flags = flags.join(sd_ok, id_col, "left").withColumn(
-                "s_sdd",
-                F.col(stage_cols[-1]) & F.coalesce(F.col("_sd_ok"), F.lit(True)),
-            )
-            stage_cols.append("s_sdd")
-            stage_names.append("self_dedup_span")
+            ).select(id_col, "kept")
+            gates.append(("self_dedup_span", sd, True))
         if keep_langs is not None:
-            # (normalized + validated in the preamble)
-            # cost note: this stage runs its own explode + stopword broadcast
-            # join over the corpus — the same tokenize pass quality_flags
-            # already runs (Spark does not dedupe the subplans).  At extreme
-            # scale, a shared explode feeding both n_stopwords and the c_*
-            # counts would halve that map stage; kept separate here for
-            # operator independence.
-            lang_ok = tx.lang_id(docs, id_col, text_col).select(
-                id_col, F.col("pred_lang").isin(list(keep_langs)).alias("_lang_ok")
+            lang = tx.lang_id(docs, id_col, text_col).select(
+                id_col, F.col("pred_lang").isin(list(keep_langs))
             )
-            flags = flags.join(lang_ok, id_col, "left").withColumn(
-                "s_lang", F.col(stage_cols[-1]) & F.coalesce(F.col("_lang_ok"), F.lit(False))
-            )
-            stage_cols.append("s_lang")
-            stage_names.append("language")
+            gates.append(("language", lang, False))
         if max_lm_nll_c is not None:
-            lm_ok = tx.ngram_lm_score(docs, id_col, text_col, train=lm_train).select(
+            lm = tx.ngram_lm_score(docs, id_col, text_col, train=lm_train).select(
                 id_col,
-                (
-                    F.col("lm_nll_c").isNotNull()
-                    & (F.col("lm_nll_c") <= int(max_lm_nll_c))
-                ).alias("_lm_ok"),
+                F.col("lm_nll_c").isNotNull()
+                & (F.col("lm_nll_c") <= int(max_lm_nll_c)),
             )
-            flags = flags.join(lm_ok, id_col, "left").withColumn(
-                "s_lm", F.col(stage_cols[-1]) & F.coalesce(F.col("_lm_ok"), F.lit(False))
-            )
-            stage_cols.append("s_lm")
-            stage_names.append("fluency")
+            gates.append(("fluency", lm, False))
         if dsir_target is not None:
-            # DSIR-style learned quality gate (Xie et al. 2023): hashed-n-gram
-            # importance weight of each doc against the target corpus
-            # (sampling.dsir_weights — integer-frozen, bounded broadcast bucket
-            # tables); docs below the pivot drop, as do unscoreable docs
-            # (zero features — the fluency gate's unconfirmable-drops
-            # convention).  For RESAMPLING (probabilistic, ∝ weight) instead
-            # of thresholding, run sampling.dsir_sample downstream.
+            # DSIR importance weight against the target corpus (Xie et al.
+            # 2023); zero-feature docs drop.  For resampling instead of
+            # thresholding, run sampling.dsir_sample downstream.
             from tikv_data_compare_spark.operators.sampling import dsir_weights
 
             dw = dsir_weights(
                 docs, dsir_target, id_col, text_col, n_buckets=int(dsir_n_buckets)
             )
             if dsir_top_frac is not None:
-                # relative mode: keep the top fraction of the corpus by weight
-                # — robust to the fact that raw log-weights shift with
-                # n_buckets and corpus mix (absolute 0 can sit above every doc
-                # at fine bucket grain).  EXACT rank via the bucketed
-                # global-index machinery (scan.with_global_index: data-derived
-                # range buckets + broadcast offsets — no single-partition
-                # window, no exact-percentile aggregate buffering every
-                # distinct weight in one task); ties break by id, keep count =
-                # ceil(frac · n_scored), n derived in-plan (1-row broadcast).
+                # keep the top ceil(frac · n_scored) docs by weight: exact
+                # rank via the bucketed global index (no single-partition
+                # window), ties by id, n derived in-plan (1-row broadcast)
                 from tikv_data_compare_spark.operators.scan import (
                     with_global_index,
                 )
@@ -663,42 +444,24 @@ def curate(
                 n_scored = scored.agg(
                     F.count(F.lit(1)).cast("long").alias("_dsir_n")
                 )
-                dw_ok = (
-                    ranked.crossJoin(F.broadcast(n_scored))
-                    .select(
-                        id_col,
-                        (
-                            F.col("_dsir_rk")
-                            <= F.ceil(F.col("_dsir_n") * float(dsir_top_frac))
-                        ).alias("_dsir_ok"),
-                    )
+                dw_ok = ranked.crossJoin(F.broadcast(n_scored)).select(
+                    id_col,
+                    F.col("_dsir_rk") <= F.ceil(F.col("_dsir_n") * float(dsir_top_frac)),
                 )
             else:
                 dw_ok = dw.select(
                     id_col,
-                    (
-                        F.col("dsir_logw_c").isNotNull()
-                        & (F.col("dsir_logw_c") >= int(min_dsir_logw_c))
-                    ).alias("_dsir_ok"),
+                    F.col("dsir_logw_c").isNotNull()
+                    & (F.col("dsir_logw_c") >= int(min_dsir_logw_c)),
                 )
-            flags = flags.join(dw_ok, id_col, "left").withColumn(
-                "s_dsir",
-                F.col(stage_cols[-1]) & F.coalesce(F.col("_dsir_ok"), F.lit(False)),
-            )
-            stage_cols.append("s_dsir")
-            stage_names.append("dsir_quality")
+            gates.append(("dsir_quality", dw_ok, False))
         if quality_seed is not None:
             from tikv_data_compare_spark.operators.sampling import (
                 quality_classifier,
             )
 
-            # quality_algo is its OWN knob (default md5i64), not a decontam_algo
-            # fallback: unlike the span stages' hash-independent verdicts, the
-            # classifier's kept set IS feature-hash-dependent (different bucket
-            # collisions → different weights), so switching it must be an
-            # explicit caller decision.  xxhash64 is the throughput path — the
-            # md5 feature fold dominates the stage's sf1 cost
-            # (probe_curate_sf1_runs r16).
+            # quality_algo is its own knob: unlike the span verdicts, the
+            # classifier's kept set depends on the feature hash
             qc = quality_classifier(
                 docs, quality_seed, crawl=quality_crawl,
                 id_col=id_col, text_col=text_col,
@@ -706,65 +469,41 @@ def curate(
                 algo=quality_algo,
             )
             if min_quality_c is not None:
-                # explicit ×1e6 mean-log-odds threshold, cross-multiplied so
-                # the gate stays integer-exact (no division)
-                q_ok = qc.select(
+                # ×1e6 mean-log-odds threshold, cross-multiplied (no division)
+                qc_ok = qc.select(
                     id_col,
-                    (
-                        F.col("q_sum_c")
-                        >= F.lit(int(min_quality_c)) * F.col("q_n_feats")
-                    ).alias("_qc_ok"),
+                    F.col("q_sum_c") >= F.lit(int(min_quality_c)) * F.col("q_n_feats"),
                 )
             else:
-                q_ok = qc.select(id_col, F.col("q_keep").alias("_qc_ok"))
-            flags = flags.join(q_ok, id_col, "left").withColumn(
-                "s_qc",
-                F.col(stage_cols[-1]) & F.coalesce(F.col("_qc_ok"), F.lit(False)),
-            )
-            stage_cols.append("s_qc")
-            stage_names.append("quality_classifier")
+                qc_ok = qc.select(id_col, "q_keep")
+            gates.append(("quality_classifier", qc_ok, False))
         if c4_rules:
-            c4_ok = tx.c4_flags(
+            c4 = tx.c4_flags(
                 docs, id_col, text_col, min_kept_lines=c4_min_kept_lines
-            ).select(id_col, F.col("c4_keep").alias("_c4_ok"))
-            flags = flags.join(c4_ok, id_col, "left").withColumn(
-                "s_c4", F.col(stage_cols[-1]) & F.coalesce(F.col("_c4_ok"), F.lit(False))
-            )
-            stage_cols.append("s_c4")
-            stage_names.append("boilerplate")
+            ).select(id_col, "c4_keep")
+            gates.append(("boilerplate", c4, False))
         if blocked_sources is not None:
-            # (normalized + validated in the preamble)
-            src_ok = docs.select(
-                id_col,
-                (~F.col(source_col).isin(blocked_sources)).alias("_src_ok"),
-            )
-            flags = flags.join(src_ok, id_col, "left").withColumn(
-                "s_src",
-                F.col(stage_cols[-1]) & F.coalesce(F.col("_src_ok"), F.lit(True)),
-            )
-            stage_cols.append("s_src")
-            stage_names.append("url_blocklist")
+            src = docs.select(id_col, ~F.col(source_col).isin(blocked_sources))
+            gates.append(("url_blocklist", src, True))
 
-        # join the warm-up futures collected so far: every persisted frame must
-        # be materialized before the funnel agg (whose subtrees consume the
-        # caches) runs.  The pool stays open — the trim transform below may
-        # still request a differently-spanned winnow frame.
-        for _f in _warm_futs:
-            _f.result()
+        flags = docs.select(id_col)
+        stage_cols: list[str] = []
+        prev = F.lit(True)
+        for i, (_, ok, on_missing) in enumerate(gates):
+            flags = flags.join(ok.toDF(id_col, f"_ok{i}"), id_col, "left").withColumn(
+                f"_s{i}", prev & F.coalesce(f"_ok{i}", F.lit(on_missing))
+            )
+            prev = F.col(f"_s{i}")
+            stage_cols.append(f"_s{i}")
+
+        for f in warm:
+            f.result()
         t0 = time.time()
-        # localCheckpoint, not persist (r19, VERDICT r18 task 1): the flags
-        # frame is (id, booleans) — tiny by design — but its LINEAGE is the
-        # whole funnel (dedup groupBy, LSH join, every gate subplan), and a
-        # persisted frame still carries that full logical plan: every
-        # downstream consumer (kept semi-join, the trim's later_ids, the
-        # caller's actions over kept) re-ANALYZES it per action — measured
-        # ~3-4 s of driver-side Catalyst time per sf0.1 curation call, the
-        # reason 8 cores beat 32 on this entry.  The eager local checkpoint
-        # runs the same funnel computation once (inside the timed
-        # funnel_flags_agg stage, as before), stores the narrow rows, and
-        # TRUNCATES the plan to a leaf for every consumer (guide §3.3 / §5).
-        # Blocks are freed by the ContextCleaner when the frame is dropped —
-        # bounded: a few MB per call at sf0.1 geometry.
+        # localCheckpoint, not persist: the flags rows are tiny, but their
+        # lineage is the whole funnel, and a persisted frame would make every
+        # consumer (the kept semi-join, the trim's later_ids, the caller's
+        # actions over kept) re-analyze that plan.  The checkpoint truncates
+        # it to a leaf; its blocks go with the frame (ContextCleaner).
         flags = flags.select(id_col, *stage_cols).localCheckpoint()
         row = flags.agg(
             F.count(F.lit(1)).alias("_n0"),
@@ -773,29 +512,21 @@ def curate(
         t_agg = time.time() - t0
         counts = [int(row[f"_n{i}"]) for i in range(len(stage_cols) + 1)]
 
-        kept = docs.join(
-            flags.filter(F.col(stage_cols[-1])).select(id_col), id_col, "left_semi"
-        )
+        survivors = flags.filter(F.col(stage_cols[-1])).select(id_col)
+        kept = docs.join(survivors, id_col, "left_semi")
         if self_dedup_trim_span is not None:
-            # a TRANSFORM, not a gate (the redact_pii convention): survivors
-            # keep their row with every >= span-char verbatim span shared with
-            # a SMALLER-id doc cut out of their text (text.self_dedup_trim —
-            # Lee et al.'s span-surgical removal; the doc-level drop
-            # alternative is the self_dedup_span STAGE above, and both may
-            # run at different spans).  The trim reference is the FULL input
-            # corpus, not the survivor set: duplicated content is duplicated
-            # regardless of whether its earlier carrier survived the funnel.
-            # Runs before redaction so PII masking sees the final text.
-            # r18: later_ids restricts the SURGERY to survivors (the dedup
-            # reference stays the full corpus — operator contract), skipping
-            # candidate+verify work for docs the gates above already dropped
+            # a TRANSFORM, not a gate: survivors keep their row with every
+            # >= span-char verbatim span shared with a smaller-id doc of the
+            # FULL input corpus cut out (duplicated content is duplicated
+            # whether or not its earlier carrier survived).  Only survivors
+            # are trimmed; runs before redaction so masking sees final text.
             trimmed = tx.self_dedup_trim(
                 docs, id_col, text_col,
-                min_span=int(self_dedup_trim_span), k=_sd_k, algo=da,
-                doc_fps=_fps_for(self_dedup_trim_span),
+                min_span=int(self_dedup_trim_span), k=5, algo=da,
+                doc_fps=span_fps[int(self_dedup_trim_span)],
                 max_fp_df=decontam_max_fp_df,
                 snap=self_dedup_trim_snap,
-                later_ids=flags.filter(F.col(stage_cols[-1])).select(id_col),
+                later_ids=survivors,
             ).select(id_col, F.col("text_trimmed"))
             kept = (
                 kept.join(trimmed, id_col)
@@ -803,41 +534,31 @@ def curate(
                 .drop("text_trimmed")
             )
         if redact_pii:
-            # a TRANSFORM, not a gate: survivors keep their row (attrition is
-            # unchanged) with PII spans masked by typed placeholders — the
-            # release-time alternative to drop_pii (both may run: drop flagged
-            # docs, then redaction is the belt-and-braces no-op).  Map-side
-            # regexp_replace inside the same kept-materialization job.
+            # a TRANSFORM, not a gate: survivors keep their row with PII
+            # spans masked (map-side, inside the kept materialization)
             kept = tx.pii_redact(kept, text_col=text_col)
         kept = kept.persist()
-        # second warm-up barrier: the trim transform may have added a winnow
-        # frame after the funnel agg joined the first batch
-        for _f in _warm_futs:
-            _f.result()
+        t0 = time.time()
+        kept.count()  # materialize so the caches can be released below
+        t_kept = time.time() - t0
+        done = True
     finally:
-        _warm_pool.shutdown(wait=False, cancel_futures=True)
-    t0 = time.time()
-    kept.count()  # materialize so flags/shingles can be released below
-    t_kept = time.time() - t0
+        # on error, in-flight warm-ups finish before their frames are
+        # released, and the half-built kept frame goes too
+        pool.shutdown(wait=True, cancel_futures=True)
+        for f in cached if done or kept is None else [*cached, kept]:
+            f.unpersist()
+        # drop operator-module broadcasts created along the way, so a
+        # session calling curate() in a loop does not accumulate them
+        release_broadcasts()
     LAST_STAGE_TIMINGS.clear()
     LAST_STAGE_TIMINGS.update(
         {"funnel_flags_agg": round(t_agg, 3), "kept_materialize": round(t_kept, 3)}
     )
-    # (flags is a local checkpoint now — no unpersist handle; its blocks
-    # are reclaimed by the ContextCleaner once the frame is unreachable)
-    sh.unpersist()
-    if shared_fps is not None:
-        shared_fps.unpersist()
-    for f in _own_fps.values():
-        f.unpersist()
-    # drop any operator-module broadcasts created along the way (plane/query
-    # matrices etc.) — a long-lived session calling curate() in a loop must
-    # not accumulate executor-side broadcast blocks
-    release_broadcasts()
     attrition = spark.createDataFrame(
         [
-            (name, counts[i], counts[i + 1], counts[i] - counts[i + 1])
-            for i, name in enumerate(stage_names)
+            (g[0], counts[i], counts[i + 1], counts[i] - counts[i + 1])
+            for i, g in enumerate(gates)
         ],
         "stage string, n_in long, n_out long, n_dropped long",
     )

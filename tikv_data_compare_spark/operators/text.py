@@ -20,10 +20,6 @@ def _stopwords():
     return STOPWORDS
 
 
-def _sw_in_list(words: list[str]) -> str:
-    return ", ".join(f"'{w}'" for w in words)
-
-
 def text_stats(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
     """Per-document quality stats: token count, char count, mean word length
     (scaled ×10000), stopword count, punctuation count.
@@ -1445,6 +1441,174 @@ def c4_flags(
     )
 
 
+def _span_fps(
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    min_span: int,
+    k: int,
+    algo: str,
+    max_fp_df: "int | None" = None,
+    doc_fps: "DataFrame | None" = None,
+    as_id: str = "_idb",
+) -> DataFrame:
+    """Span-match part 1, the fingerprint source: ``(as_id, fp)`` winnow
+    fingerprints of ``df`` at window ``w = min_span - k + 1``, so every
+    verbatim span of ``>= min_span`` chars shared by two docs yields a
+    shared fingerprint.  NULL fingerprints (NULL text) are dropped.
+
+    ``doc_fps`` substitutes a precomputed :func:`winnow_fingerprints`
+    frame over ``(id_col, text_col)``; its geometry stamp is checked.
+    Raises ``ValueError`` when ``min_span < k + 1`` or ``max_fp_df < 1``.
+    """
+    if min_span < k + 1:
+        raise ValueError(
+            f"min_span must be >= k + 1 (= {k + 1}) so the winnow window "
+            f"w = min_span - k + 1 is >= 2, got min_span={min_span}"
+        )
+    if max_fp_df is not None and int(max_fp_df) < 1:
+        raise ValueError(
+            f"max_fp_df must be >= 1 when given (got {max_fp_df}): a "
+            "zero/negative threshold would mark every fingerprint hot"
+        )
+    w = min_span - k + 1
+    if doc_fps is None:
+        doc_fps = winnow_fingerprints(df, id_col, text_col, k=k, w=w, algo=algo)
+    else:
+        _check_winnow_fps(doc_fps, id_col, k, w, algo, text_col)
+    return doc_fps.select(F.col(id_col).alias(as_id), "fp").where(
+        F.col("fp").isNotNull()
+    )
+
+
+def _hot_split(
+    corpus_fp: DataFrame, max_fp_df: int, *sides: DataFrame
+) -> list[tuple[DataFrame, DataFrame]]:
+    """Span-match part 2, the hot/cold split: a fingerprint is HOT when
+    more than ``max_fp_df`` corpus docs carry it.  For each ``(id, fp)``
+    side frame returns ``(cold fps, affected ids)``: its rows without hot
+    fingerprints, and the distinct ids carrying at least one.
+
+    The split keeps matching exact: a shared span's winnow fingerprint is
+    either cold (the pair meets in the cold candidate join) or hot (both
+    members are affected and meet in the hot gram join).
+    """
+    df_per_fp = corpus_fp.groupBy("fp").count()
+    hot = F.broadcast(df_per_fp.where(F.col("count") > int(max_fp_df)).select("fp"))
+    return [
+        (
+            fp.join(hot, "fp", "left_anti"),
+            fp.join(hot, "fp", "left_semi").select(fp.columns[0]).distinct(),
+        )
+        for fp in sides
+    ]
+
+
+def _bc(df: DataFrame, bcast: bool) -> DataFrame:
+    return F.broadcast(df) if bcast else df
+
+
+def _hot_gram_join(
+    l_src: DataFrame,
+    r_src: DataFrame,
+    l_txt: DataFrame,
+    min_span: int,
+    pred,
+    bcast: bool,
+    partners: bool,
+    starts: bool,
+) -> DataFrame:
+    """Span-match part 3, the hot gram join over affected docs.
+
+    ``l_src`` is ``(_idb, _bt)``, ``r_src`` ``(_ida, _at)`` and ``l_txt``
+    the full ``(_idb, _bt)`` text frame.  Every ``min_span``-gram of an L
+    doc joins the R grams on the gram itself, so a match is a verbatim
+    hit and needs no verify.  Returns ``(_idb, _ida)`` pairs with an R
+    doc satisfying ``pred``, plus the 1-based start ``_i`` of the L gram
+    when ``starts``.
+
+    ``partners=True`` keeps every ``(R doc, gram)`` row, so ``_ida``
+    ranges over all matching R docs.  ``partners=False`` collapses the R
+    side to one row per distinct gram carrying its minimum ``_ida``, so
+    the join output is bounded by the L positions and ``_ida`` is only a
+    witness; ``pred`` must then be monotone in ``_ida`` (true, or
+    ``_ida < _idb``).  The collapsed join is keyed by ``xxhash64`` of the
+    gram and re-verified on the string, so a hash collision never hits.
+    With ``starts`` the L side ships only ``(_idb, _i, hash)`` and the
+    re-verify rebuilds the gram from ``l_txt``.
+    """
+    pos = _span_grams(l_src, "_idb", "_bt", min_span, with_pos=starts)
+    grams = _span_grams(r_src, "_ida", "_at", min_span)
+    cols = ["_idb", "_ida", "_i"][: 3 if starts else 2]
+    if partners:
+        ref = _bc(grams.distinct(), bcast)
+        return pos.join(ref, "gram").where(pred).select(*cols)
+    ref = _bc(
+        grams.groupBy("gram")
+        .agg(F.min("_ida").alias("_ida"))
+        .select(F.xxhash64("gram").alias("_gh"), F.col("gram").alias("_gs"), "_ida"),
+        bcast,
+    )
+    pos = pos.withColumn("_gh", F.xxhash64("gram"))
+    if starts:
+        hits = (
+            pos.drop("gram")
+            .join(ref, "_gh")
+            .where(pred)
+            .join(l_txt, "_idb")
+            .where(F.expr(f"substr(_bt, _i, {min_span})") == F.col("_gs"))
+        )
+    else:
+        hits = pos.join(ref, "_gh").where(pred & (F.col("gram") == F.col("_gs")))
+    return hits.select(*cols)
+
+
+def _cold_pairs(fp_a: DataFrame, fp_b: DataFrame, pred) -> DataFrame:
+    """Span-match part 4, the cold candidate join of an ``(_idb, fp)`` and
+    an ``(_ida, fp)`` frame, in either order: distinct ``(_idb, _ida)``
+    pairs sharing a fingerprint and satisfying ``pred``.  The order sets
+    the join's stream side, and with it the output partitioning."""
+    return fp_a.join(fp_b, "fp").where(pred).select("_idb", "_ida").distinct()
+
+
+def _any_gram_in(min_span: int):
+    """Span-match part 5, the verbatim verify of a candidate pair with
+    texts ``(_bt, _at)``, in one of two orientations.  This one is
+    containment: true iff some ``min_span``-gram of ``_at`` occurs in
+    ``_bt`` (``exists`` stops at the first hit).  NULL or short texts give
+    false; ``sequence(1, n)`` descends for ``n < 1``, hence the guard."""
+    return F.expr(
+        f"coalesce(CASE WHEN length(_at) >= {min_span} THEN "
+        f"exists(transform(sequence(1, length(_at) - {min_span} + 1), "
+        f"i -> substr(_at, i, {min_span})), g -> contains(_bt, g)) "
+        f"ELSE false END, false)"
+    )
+
+
+def _shared_starts(min_span: int):
+    """The other verify orientation, by position: the 1-based starts in
+    ``_bt`` whose ``min_span``-gram occurs in ``_at`` (empty for NULL or
+    short texts).  It cannot stop early, so it costs more than
+    :func:`_any_gram_in`."""
+    return F.expr(
+        f"CASE WHEN length(_at) >= {min_span} AND length(_bt) >= {min_span} "
+        f"THEN filter(sequence(1, length(_bt) - {min_span} + 1), "
+        f"i -> contains(_at, substr(_bt, i, {min_span}))) "
+        f"ELSE CAST(array() AS array<int>) END"
+    )
+
+
+def _only(df: DataFrame, col: str, ids: "DataFrame | None", id_col: str) -> DataFrame:
+    """``df`` restricted to the ``id_col`` values of ``ids`` (matched on
+    ``col``); all of ``df`` when ``ids`` is None."""
+    if ids is None:
+        return df
+    # join on the ids frame's own column: a renaming projection would stop
+    # Spark from reusing the exchange of the same ids elsewhere in the plan
+    on = id_col if col == id_col else F.col(col) == F.col(id_col)
+    return df.join(ids.select(id_col), on, "left_semi")
+
+
 def decontaminate_substring(
     docs: DataFrame,
     probes: DataFrame,
@@ -1459,306 +1623,176 @@ def decontaminate_substring(
     algo: str = "xxhash64",
     max_fp_df: int | None = None,
     doc_fps: DataFrame | None = None,
-    hot_fp_mode: str = "rekey",
     verdict_only: bool = False,
 ) -> DataFrame:
-    """Exact-substring test-set decontamination (r10): flag every document
-    sharing a VERBATIM character span of at least ``min_span`` with any
-    probe/benchmark document — the GPT-3/LLaMA decontamination criterion
-    (N-token exact overlap), complementing ``contamination``'s softer
-    distinct-n-gram screen.
+    """Exact-substring decontamination: flag every document that shares a
+    verbatim span of at least ``min_span`` characters with any probe
+    (the GPT-3/LLaMA test-set overlap criterion).
 
-    ``bloom_m_bits`` (r12) is the corpus-sized-probe-set mode: the doc
-    fingerprints are pre-screened map-side against a fixed-size Bloom
-    bitmap of the probe fingerprints (``operators/bloom.py``, ≤
-    ``ceil(m/63)`` broadcast rows), and the candidate/verify joins that
-    follow run as ORDINARY shuffle joins instead of broadcasting the
-    probe fingerprint/text tables — nothing in the plan grows with the
-    probe set except the shuffles, which are sized by the (bloom-pruned)
-    candidate survivors.  Because the bloom has zero false negatives and
-    the fingerprint join re-checks every survivor exactly, the RESULT is
-    identical at any ``m`` (equivalence-tested).
+    Returns one row per input document,
+    ``(id, n_candidate_probes, n_contam_probes, contaminated)``, or
+    ``(id, contaminated)`` when ``verdict_only``.  ``n_contam_probes``
+    and ``contaminated`` are exact: they equal a brute-force doc × probe
+    substring check.  ``n_candidate_probes`` counts the pairs that
+    reached the verify; it depends on ``algo`` and ``max_fp_df`` and is
+    for observability only.  NULL or short texts are never contaminated.
 
-    Composition of machinery already in-tree (r9 verdict task 5):
+    Method: both sides are winnowed so any shared span shares a
+    fingerprint (``k``-char grams, window ``min_span - k + 1``); the
+    fingerprint equi-join yields candidate pairs, and each is verified by
+    testing whether some ``min_span``-gram of the probe occurs in the
+    doc.  Probes are assumed benchmark-sized and broadcast; the doc side
+    never shuffles for the joins.
 
-    1. winnow BOTH sides at the target span — ``winnow_fingerprints`` with
-       ``w = min_span − k + 1`` guarantees any shared span of length
-       ≥ w+k−1 = ``min_span`` shares a fingerprint (NO false negatives);
-    2. equi-join the doc fingerprints against the broadcast probe
-       fingerprint set → candidate (doc, probe) pairs;
-    3. verify each candidate with the exact check — does any ``min_span``-
-       gram of the probe occur verbatim in the doc (substring `contains`,
-       one array HOF per candidate pair).
+    ``algo`` (``xxhash64`` or ``md5i64``) is the winnow gram hash on both
+    sides.  It changes only the candidate set, never the verdict.
 
-    The winnow prune has false positives but the verify is exact, so the
-    RESULT equals brute force — which is exactly how the oracle gates it
-    (a from-scratch doc×probe substring check in DuckDB), while the
-    winnowed path does corpus work proportional to ~2/(w+1) of character
-    positions plus the (normally tiny) candidate set.  Probes are
-    benchmark-sized: their fingerprints and texts both broadcast; the
-    100 TB doc side never shuffles — map-side winnow, broadcast joins,
-    one per-doc aggregation.
+    ``max_fp_df`` splits off HOT fingerprints (carried by more than that
+    many docs).  Docs and probes carrying one are matched by joining all
+    their ``min_span``-grams on the gram string, which is exact, and the
+    rest go through the candidate join.  The verdict columns are
+    identical at any threshold; only the cost changes.  None disables
+    the split.
 
-    Returns one row per input document:
-    ``(id, n_candidate_probes, n_contam_probes, contaminated)`` —
-    candidates are winnow-level (implementation detail, for observability);
-    ``n_contam_probes``/``contaminated`` are exact.  NULL/short texts are
-    never contaminated (no span of ``min_span`` chars exists).
+    ``bloom_m_bits`` is the corpus-sized probe mode: doc fingerprints are
+    pre-screened against an ``m``-bit Bloom filter of the probe
+    fingerprints, and the probe tables are joined by shuffle instead of
+    broadcast.  The result is identical at any ``m``.
 
-    ``algo`` (r15) picks the winnow gram hash on BOTH sides — ``xxhash64``
-    (default since r18 — the winnow hash only PRUNES and the verify is a
-    hash-independent verbatim ``contains``, so the verified columns are
-    identical across algos while xxhash64 measured ~2.2× faster at sf1,
-    tools/probe_trim_sf1_runs.jsonl) or ``md5i64`` (the DuckDB-replayable
-    gate hash — the gated ``text_fingerprints`` row pins it explicitly).
-    ``n_contam_probes``/``contaminated`` are identical across algos
-    (equivalence-tested); only the observability-only candidate count may
-    differ (different hash → different coincidental collisions).
+    ``doc_fps`` reuses a persisted :func:`winnow_fingerprints` frame of
+    ``docs`` (checked against its geometry stamp when present).
 
-    ``max_fp_df`` (r15, EXACT since r16) — the HOT-FINGERPRINT threshold:
-    on template-heavy corpora the winnow minima of common phrases occur in
-    a large corpus fraction, and the candidate join inflates to
-    (hot-fp df × probes sharing it) pairs — measured 62.2M candidates /
-    2157 cpu-s verify for 2.5k probes × 50k docs at sf1 (BASELINE.md
-    r15).  Fingerprints whose CORPUS document-frequency exceeds the
-    threshold are pulled out of the candidate join; what happens to them
-    is ``hot_fp_mode``:
-
-    * ``"rekey"`` (default, r16 — VERDICT r15 task 2): docs and probes
-      carrying a hot fingerprint are RE-KEYED at full span resolution —
-      every ``min_span``-gram of the affected docs joins (map-side,
-      broadcast in the default small-probe mode) against the affected
-      probes' gram sets on the literal gram STRING, so the join equality
-      IS the verbatim check.  Recall-complete: a contaminated pair either
-      shares a cold fingerprint (winnow path — the no-false-negative
-      guarantee restricted to cold fps, since a shared span whose
-      selected fingerprint is hot makes BOTH members affected) or both
-      members are affected (gram path, exact by construction).  The
-      RESULT is byte-identical to uncapped exact for the verdict columns
-      at ANY threshold and either ``algo`` (equivalence-tested);
-      ``max_fp_df`` becomes a pure performance knob — it trades winnow
-      candidate-join fan-out against re-key gram fan-out — never a
-      recall trade.  Only ``n_candidate_probes`` (observability) can
-      differ: re-keyed pairs enter the candidate set post-verification,
-      so hot-path candidates are already true hits.
-    * ``"drop"`` (the r15 behavior, kept for measurement): hot
-      fingerprints are dropped from both sides.  APPROXIMATE — a
-      contaminated pair sharing only hot fingerprints is silently missed,
-      the wrong failure direction for a decontamination safety gate; use
-      only to bound the winnow path's cost contribution.
-
-    Default None = no split, the uncapped oracle-gate path.
-    ``max_fp_df`` must be ``>= 1`` when given (a zero/negative threshold
-    would mark every fingerprint hot — in drop mode that silently
-    decontaminates nothing; loud-validation convention, ADVICE r15).
-
-    ``doc_fps`` (r15) — the reuse seam (the dsir ``weights=``
-    convention): a pipeline that already winnowed the corpus (for
-    :func:`self_dedup_substring`, a Bloom index, or several
-    decontamination runs) passes the persisted
-    :func:`winnow_fingerprints` output instead of paying the
-    ~200-cpu-s/50k-doc winnow pass again; geometry is verified against
-    the frame's column-metadata stamp when present.  With ``max_fp_df``
-    set this matters even for a SINGLE run: the corpus fingerprint frame
-    feeds three subtrees (hot-df aggregate, affected-id semi-join, cold
-    side), and Spark does not dedupe unpersisted subplans — curate()
-    passes a persisted frame whenever a span stage is active (r16).
-
-    ``verdict_only`` (r19, VERDICT r18 task 2) — the GATE projection:
-    returns ``(id, contaminated)`` only, and licenses the hot-fingerprint
-    gram join to COLLAPSE its probe side to ONE row per distinct gram
-    (the trim path's ``collapse_earlier`` treatment; the verdict is pure
-    existence, so even the witness probe id is dropped), keyed by the
-    gram's ``xxhash64`` with an exact in-flight string re-verify — join
-    output bounded by the affected docs' position count instead of
-    positions × probes-sharing-a-gram (the template-corpus quadratic).
-    ``contaminated`` is byte-identical to the full operator's column
-    (a doc is contaminated iff ANY (doc, probe) hot pair exists — every
-    hot pair verifies true — OR any cold candidate verifies;
-    parity-tested); the per-probe COUNTS cannot survive the collapse,
-    which is exactly why they are not returned.  ``curate()``'s
-    decontamination stage — which consumes only the verdict — passes
-    this.
+    ``verdict_only`` returns the verdict projection.  Since it needs
+    existence only, the hot gram join collapses its probe side to one row
+    per distinct gram.
     """
-    if min_span < k + 1:
-        raise ValueError(
-            f"min_span must be >= k + 1 (= {k + 1}) so the winnow window "
-            f"w = min_span - k + 1 is >= 2, got min_span={min_span}"
-        )
-    if max_fp_df is not None and int(max_fp_df) < 1:
-        raise ValueError(
-            f"max_fp_df must be >= 1 when given (got {max_fp_df}): a "
-            "zero/negative threshold marks every fingerprint hot — in "
-            "drop mode the decontamination stage would then flag nothing "
-            "while appearing to run"
-        )
-    if hot_fp_mode not in ("rekey", "drop"):
-        raise ValueError(
-            f"hot_fp_mode must be 'rekey' or 'drop', got {hot_fp_mode!r}"
-        )
-    w = min_span - k + 1
-    # ONE algo for both sides — fingerprints only equi-join within a hash
-    # family (winnow_fingerprints docstring, r15)
-    if doc_fps is not None:
-        _check_winnow_fps(doc_fps, id_col, k, w, algo, text_col)
-        d_fp = doc_fps.select(id_col, "fp")
-    else:
-        d_fp = winnow_fingerprints(docs, id_col, text_col, k=k, w=w, algo=algo)
-    p_fp = winnow_fingerprints(
-        probes, probe_id_col, probe_text_col, k=k, w=w, algo=algo
-    ).select(probe_id_col, "fp")
-    hot_pairs = None
-    hot_ids = None
+    fp = _span_fps(docs, id_col, text_col, min_span, k, algo, max_fp_df, doc_fps)
+    pfp = _span_fps(
+        probes, probe_id_col, probe_text_col, min_span, k, algo, as_id="_ida"
+    )
+    l_txt = docs.select(F.col(id_col).alias("_idb"), F.col(text_col).alias("_bt"))
+    r_txt = probes.select(
+        F.col(probe_id_col).alias("_ida"), F.col(probe_text_col).alias("_at")
+    )
+    bcast, every = bloom_m_bits is None, F.lit(True)
+    hot = None
     if max_fp_df is not None:
-        hot = (
-            d_fp.groupBy("fp")
-            .agg(F.count(F.lit(1)).alias("_df"))
-            .where(F.col("_df") > int(max_fp_df))
-            .select("fp")
+        (fp, d_aff), (pfp, p_aff) = _hot_split(fp, max_fp_df, fp, pfp)
+        hot = _hot_gram_join(
+            l_txt.join(d_aff, "_idb", "left_semi"),
+            r_txt.join(p_aff, "_ida", "left_semi"),
+            l_txt, min_span, every, bcast, not verdict_only, starts=False,
         )
-        if hot_fp_mode == "rekey":
-            # affected = members carrying >= 1 hot fingerprint; their
-            # re-keyed gram join below is the exact replacement for the
-            # hot part of the candidate join
-            d_aff = (
-                d_fp.join(F.broadcast(hot), "fp", "left_semi")
-                .select(id_col).distinct()
-            )
-            p_aff = (
-                p_fp.join(F.broadcast(hot), "fp", "left_semi")
-                .select(probe_id_col).distinct()
-            )
-            # doc side stays map-side: positions NOT deduplicated (a
-            # distinct would shuffle 20x the affected corpus bytes); the
-            # (doc, probe) distinct below runs on the join output, which
-            # is sized by true hits.  Probe side dedupes per probe — it
-            # is benchmark-sized and (default mode) broadcast.
-            d_g = _span_grams(
-                docs.join(d_aff, id_col, "left_semi"),
-                id_col, text_col, min_span,
-            )
-            if verdict_only:
-                # the verdict is pure EXISTENCE, so the probe id is dropped
-                # before the join: ONE row per DISTINCT affected-probe gram
-                # (the trim path's collapse, r18) keyed by the gram's 64-bit
-                # hash — join output is bounded by the affected docs'
-                # position count instead of positions × probes-sharing-a-
-                # gram (the template-corpus quadratic), and exactness is
-                # restored by comparing the doc's in-flight gram string to
-                # the set row's (a hash collision fails the compare; every
-                # true hit matches its own gram's (hash, string) row).
-                p_gd = (
-                    _span_grams(
-                        probes.join(p_aff, probe_id_col, "left_semi"),
-                        probe_id_col, probe_text_col, min_span,
-                    )
-                    .select("gram").distinct()
-                    .select(
-                        F.xxhash64("gram").alias("_gh"),
-                        F.col("gram").alias("_gs"),
-                    )
-                )
-                hot_ids = (
-                    d_g.select(id_col, F.xxhash64("gram").alias("_gh"), "gram")
-                    .join(
-                        p_gd if bloom_m_bits is not None else F.broadcast(p_gd),
-                        "_gh",
-                    )
-                    .where(F.col("gram") == F.col("_gs"))
-                    .select(id_col)
-                    .distinct()
-                )
-            else:
-                p_g = _span_grams(
-                    probes.join(p_aff, probe_id_col, "left_semi"),
-                    probe_id_col, probe_text_col, min_span,
-                ).distinct()
-                hot_pairs = (
-                    d_g.join(p_g if bloom_m_bits is not None else F.broadcast(p_g), "gram")
-                    .select(id_col, probe_id_col)
-                    .distinct()
-                )
-        d_fp = d_fp.join(F.broadcast(hot), "fp", "left_anti")
-        p_fp = p_fp.join(F.broadcast(hot), "fp", "left_anti")
     if bloom_m_bits is not None:
-        from tikv_data_compare_spark.operators.bloom import (
-            bloom_build,
-            bloom_probe,
-        )
+        from tikv_data_compare_spark.operators.bloom import bloom_build, bloom_probe
 
-        bitmap = bloom_build(
-            p_fp.where(F.col("fp").isNotNull()), "fp",
-            bloom_m_bits, bloom_k_hashes,
-        )
-        # winnow emits array_distinct fps per doc, so (id, fp) already
-        # uniquely keys the rows (the bloom_probe contract); NULL fps
-        # could never survive the scalar equi-join below either way
-        d_fp = bloom_probe(
-            d_fp.where(F.col("fp").isNotNull()), bitmap, "fp",
-            bloom_m_bits, bloom_k_hashes, id_cols=[id_col, "fp"],
+        bitmap = bloom_build(pfp, "fp", bloom_m_bits, bloom_k_hashes)
+        fp = bloom_probe(
+            fp, bitmap, "fp", bloom_m_bits, bloom_k_hashes, id_cols=["_idb", "fp"]
         ).where(F.col("might_contain") == 1).drop("might_contain")
-    # benchmark-sized probes broadcast (the default); the bloom mode exists
-    # precisely because the probe tables are too big to broadcast there, so
-    # it leaves both joins to the planner (shuffle joins sized by the
-    # bloom-pruned survivors)
-    p_fp_side = p_fp if bloom_m_bits is not None else F.broadcast(p_fp)
-    cand = (
-        d_fp.join(p_fp_side, "fp")
-        .select(id_col, probe_id_col)
-        .distinct()
+    cand = _cold_pairs(fp, _bc(pfp, bcast), every)
+    if hot is not None and not verdict_only:
+        # hot pairs are true hits; the shared verify keeps them exact
+        cand = cand.unionByName(hot.select("_idb", "_ida").distinct()).distinct()
+    pairs = (
+        cand.join(l_txt, "_idb")
+        .join(_bc(r_txt, bcast), "_ida")
+        .withColumn("_hit", _any_gram_in(min_span))
     )
-    if hot_pairs is not None:
-        # re-keyed pairs are verified hits already; running them through
-        # the shared verify below keeps one pipeline and stays exact
-        cand = cand.unionByName(hot_pairs).distinct()
-    p_txt = probes.select(probe_id_col, F.col(probe_text_col).alias("_pt"))
-    pairs = cand.join(
-        docs.select(id_col, F.col(text_col).alias("_dt")), id_col
-    ).join(
-        p_txt if bloom_m_bits is not None else F.broadcast(p_txt),
-        probe_id_col,
-    )
-    # Spark's sequence(1, n) DESCENDS for n < 1, so the short-probe case is
-    # guarded explicitly; contains(NULL, g) is NULL → coalesce to false
-    hit = F.expr(
-        f"coalesce(CASE WHEN length(_pt) >= {min_span} THEN "
-        f"exists(transform(sequence(1, length(_pt) - {min_span} + 1), "
-        f"i -> substr(_pt, i, {min_span})), g -> contains(_dt, g)) "
-        f"ELSE false END, false)"
-    )
+    base = docs.select(F.col(id_col).alias("_idb"))
     if verdict_only:
-        # cold verdict per doc (the hot side never entered cand here); a
-        # doc is contaminated iff any cold candidate verifies OR any hot
-        # gram matched — the full operator's max(_hit) over cand ∪
-        # hot_pairs decomposes exactly this way because every hot pair
-        # verifies true (the shared gram is a probe gram contained in the
-        # doc), so the OR is byte-identical to the full column.
-        cold = pairs.withColumn("_hit", hit).groupBy(id_col).agg(
-            F.max(F.col("_hit")).alias("_chit")
+        # contaminated = any cold pair verifies OR any hot gram matched
+        out = base.join(
+            pairs.groupBy("_idb").agg(F.max("_hit").alias("_chit")), "_idb", "left"
         )
-        out = docs.select(id_col).join(cold, id_col, "left")
         flag = F.coalesce("_chit", F.lit(False))
-        if hot_ids is not None:
+        if hot is not None:
             out = out.join(
-                hot_ids.withColumn("_hhit", F.lit(True)), id_col, "left"
+                hot.select("_idb").distinct().withColumn("_hhit", F.lit(True)),
+                "_idb", "left",
             )
             flag = flag | F.coalesce("_hhit", F.lit(False))
-        return out.select(id_col, flag.alias("contaminated"))
-    verdicts = pairs.withColumn("_hit", hit).groupBy(id_col).agg(
+        return out.select(F.col("_idb").alias(id_col), flag.alias("contaminated"))
+    verdicts = pairs.groupBy("_idb").agg(
         F.count(F.lit(1)).cast("long").alias("n_candidate_probes"),
         F.sum(F.col("_hit").cast("long")).cast("long").alias("n_contam_probes"),
         F.max(F.col("_hit")).alias("contaminated"),
     )
-    return docs.select(id_col).join(verdicts, id_col, "left").select(
-        id_col,
-        F.coalesce("n_candidate_probes", F.lit(0)).cast("long").alias(
-            "n_candidate_probes"
-        ),
-        F.coalesce("n_contam_probes", F.lit(0)).cast("long").alias(
-            "n_contam_probes"
-        ),
+    return base.join(verdicts, "_idb", "left").select(
+        F.col("_idb").alias(id_col),
+        *[
+            F.coalesce(c, F.lit(0)).cast("long").alias(c)
+            for c in ("n_candidate_probes", "n_contam_probes")
+        ],
         F.coalesce("contaminated", F.lit(False)).alias("contaminated"),
     )
+
+
+def _self_dedup_hits(
+    docs: DataFrame,
+    id_col: str,
+    text_col: str,
+    min_span: int,
+    k: int,
+    max_fp_df: "int | None",
+    algo: str,
+    doc_fps: "DataFrame | None",
+    later_ids: "DataFrame | None",
+    partners: bool,
+) -> DataFrame:
+    """The span match of the corpus against itself: every ``(_idb, _ida,
+    _i)`` where the ``min_span``-gram at 1-based start ``_i`` of doc
+    ``_idb`` occurs verbatim in a doc ``_ida < _idb``.  Triples may
+    repeat; consumers aggregate with distinct.
+
+    ``later_ids`` restricts ``_idb`` to those ids, while ``_ida`` and the
+    hot-fingerprint statistics still range over the whole corpus, so each
+    kept doc gets exactly its full-run hits.  ``partners=False`` makes
+    ``_ida`` a witness rather than every earlier partner
+    (:func:`_hot_gram_join`).
+
+    Docs affected by a hot fingerprint meet each other in the hot gram
+    join, which is complete for such pairs, so pairs with both members
+    affected leave the cold candidates before the verify.
+    """
+    from tikv_data_compare_spark.session import scale_out
+
+    txt = docs.select(F.col(id_col).alias("_idb"), F.col(text_col).alias("_bt"))
+    ref_txt = txt.select(F.col("_idb").alias("_ida"), F.col("_bt").alias("_at"))
+    fp = _span_fps(docs, id_col, text_col, min_span, k, algo, max_fp_df, doc_fps)
+    earlier = F.col("_ida") < F.col("_idb")
+    hot = None
+    if max_fp_df is None:
+        fp = fp.withColumn("_aff", F.lit(False))
+    else:
+        ((fp, affected),) = _hot_split(fp, max_fp_df, fp)
+        # widen the scan before the semi-join: the gram explode is the
+        # heavy map stage, and a broadcast semi-join keeps the scan's split
+        # count (session.scale_out docstring)
+        src = scale_out(txt, key="_idb").join(affected, "_idb", "left_semi")
+        hot = _hot_gram_join(
+            _only(src, "_idb", later_ids, id_col),
+            src.select(F.col("_idb").alias("_ida"), F.col("_bt").alias("_at")),
+            txt, min_span, earlier, False, partners, starts=True,
+        )
+        fp = fp.join(affected.withColumn("_aff", F.lit(True)), "_idb", "left")
+    both = F.coalesce("_affa", F.lit(False)) & F.coalesce("_affb", F.lit(False))
+    # earlier side first: the pairs come out partitioned by _ida, ready
+    # for the first text join
+    cand = _cold_pairs(
+        fp.select(F.col("_idb").alias("_ida"), "fp", F.col("_aff").alias("_affa")),
+        _only(fp, "_idb", later_ids, id_col).withColumnRenamed("_aff", "_affb"),
+        earlier & ~both,
+    )
+    starts = (
+        cand.join(ref_txt, "_ida")
+        .join(txt, "_idb")
+        .withColumn("_ss", _shared_starts(min_span))
+    )
+    hits = starts.where(F.size("_ss") > 0).select(
+        "_idb", "_ida", F.explode("_ss").alias("_i")
+    )
+    return hits if hot is None else hits.unionByName(hot)
 
 
 def self_dedup_substring(
@@ -1770,117 +1804,46 @@ def self_dedup_substring(
     max_fp_df: int | None = None,
     algo: str = "xxhash64",
     doc_fps: DataFrame | None = None,
-    hot_fp_mode: str = "rekey",
     later_ids: "DataFrame | None" = None,
 ) -> DataFrame:
-    """Corpus-INTERNAL exact-substring deduplication (r12): span-level
-    duplicate detection within the corpus itself — the suffix-array
-    ExactSubstr pass of Lee et al. 2021 ("Deduplicating Training Data
-    Makes Language Models Better"), recast as the self-joined composition
-    of :func:`decontaminate_substring`'s winnow machinery:
+    """Corpus-internal exact-substring dedup (the ExactSubstr criterion of
+    Lee et al. 2021): a doc is dropped iff it shares a verbatim span of at
+    least ``min_span`` characters with a SMALLER-id doc.
 
-    1. winnow the corpus ONCE at the target span (``w = min_span − k + 1``
-       guarantees any shared span of length ≥ ``min_span`` between two
-       docs shares a winnow fingerprint — no false negatives);
-    2. fingerprint self-equi-join with ``id_a < id_b`` → candidate pairs
-       (each unordered pair once, oriented earlier→later);
-    3. verify each candidate verbatim: the start positions ``i`` in the
-       LATER doc whose ``min_span``-gram occurs in the earlier doc;
-    4. aggregate per later doc: partners, the distinct start-position
-       union, and the covered-character count (union of the
-       ``[i, i+min_span)`` intervals — exact integer interval algebra).
+    Returns one row per input doc,
+    ``(id, n_dup_partners, n_dup_starts, n_dup_chars, kept)``:
+    the number of smaller-id docs sharing a span, the number of 1-based
+    starts in this doc whose ``min_span``-gram occurs in one of them, the
+    characters those spans cover (the union of ``[i, i + min_span)``),
+    and ``kept``.  The output equals brute force over all pairs.  The
+    keep rule is per doc and globally first: kept docs are mutually
+    span-disjoint and every dropped doc has an earlier partner.  NULL or
+    short docs are kept.
 
-    The keep rule is globally-first (the same convention as
-    ``dedup.c4_line_dedup``): a doc is dropped iff it shares a span with
-    any SMALLER-id doc, so the verdict is a pure function of content +
-    ids, KEPT docs are mutually span-disjoint, and every dropped doc has
-    an earlier partner.  Note the rule is per-DOC, not per-span-family:
-    under partner chains (A↔B on span1, B↔C on span2 with span2 absent
-    from A) a family can lose every carrier — B drops for span1, C drops
-    for span2 — the same property as Lee et al.'s document-level variant;
-    span-level surgical removal is what ``n_dup_chars`` sizes, not what
-    the drop rule performs.
-    ``n_dup_chars`` is the trim size a span-removal pass would cut.
+    Method: the corpus is winnowed once (window ``min_span - k + 1``),
+    fingerprint self-equi-join pairs ``id_a < id_b`` become candidates,
+    and each candidate is verified by position.  The cost is
+    O(candidate pairs × positions), never all pairs.
 
-    Scale shape: the winnow is map-side (zero shuffle); the self-join is
-    a fingerprint equi-join — never all-pairs — and the verify cost is
-    O(candidate pairs · span positions).  The one skew hazard is a
-    boilerplate span shared by thousands of docs (its fingerprint bucket
-    goes quadratic — the same hazard as any LSH band); ``max_fp_df``
-    marks fingerprints winnow-selected by more than that many docs HOT
-    (must be >= 1 when given), and ``hot_fp_mode`` picks their handling:
+    ``max_fp_df`` splits off HOT fingerprints (carried by more than that
+    many docs), the quadratic hazard of boilerplate spans: docs carrying
+    one are matched by a gram-string join instead, and pairs of two such
+    docs skip the candidate join.  The output is identical at any
+    threshold.  ``algo`` (``xxhash64`` or ``md5i64``) is the winnow hash;
+    it never changes the output.  ``doc_fps`` reuses a persisted
+    :func:`winnow_fingerprints` frame (geometry-checked).
 
-    * ``"rekey"`` (default, r16 — VERDICT r15 task 2, exactness-
-      preserving): docs carrying a hot fingerprint ("affected") are
-      re-keyed at full span resolution — every positional
-      ``min_span``-gram of the affected docs joins against the affected
-      docs' distinct gram sets on the literal gram STRING (``a < b``),
-      which yields the COMPLETE ``(later doc, earlier partner, start)``
-      hit triples for every affected×affected pair in one bounded join
-      (gram equality is the verbatim check; join output is sized by true
-      hits).  Cold candidate pairs with at least one unaffected member
-      keep the per-pair verify (complete per pair); pairs where BOTH
-      members are affected are excluded from it — the gram join already
-      covers them.  Recall-complete: a shared span's selected
-      fingerprint is either cold (winnow path catches the pair — if it
-      were hot, both members would be affected) or hot (both affected →
-      gram path).  Output is byte-identical to uncapped/brute force at
-      ANY threshold and either ``algo`` (equivalence-tested);
-      ``max_fp_df`` is a pure performance knob trading winnow
-      candidate fan-out against gram-join fan-out.  On corpora whose
-      TRUE duplicate-pair set is itself quadratic (50k docs sharing one
-      license span), the cost is proportional to that answer — the
-      irreducible floor for pair-level exact semantics.
-    * ``"drop"`` (the r12–r15 behavior, kept for measurement): hot
-      fingerprints are dropped — the standard stop-fingerprint cap, a
-      documented recall trade (a span is only guaranteed found while its
-      fingerprint stays under the cap; Lee et al. handle such spans by
-      the suffix array's global order instead).
-
-    Default ``max_fp_df=None`` = exact, equal to brute force (the
-    oracle contract).
-
-    ``algo`` (r15) picks the winnow gram hash — ``xxhash64`` (default
-    since r18: the PRUNE changes but the verbatim verify is
-    hash-independent, so the verified output is identical across algos —
-    equivalence-tested — and xxhash64 measured ~2.2× faster at sf1) or
-    ``md5i64`` (the DuckDB-replayable gate hash; the gated
-    ``text_fingerprints`` row pins it explicitly).  Caveat: with
-    ``max_fp_df`` set AND ``hot_fp_mode="drop"``, the hot-fingerprint cut
-    is applied in hash space, so that approximation — already documented
-    as such — may differ across algos (the default ``"rekey"`` mode stays
-    byte-identical at any threshold and either algo).
-    ``doc_fps`` (r15) reuses a precomputed :func:`winnow_fingerprints`
-    frame (geometry metadata-verified) — see
-    :func:`decontaminate_substring`.
-
-    ``later_ids`` (r18, one ``{id_col}`` column) scores ONLY those docs —
-    one output row per id in the set — while the earlier-carrier
-    reference and the hot-fingerprint statistics stay the full ``docs``
-    corpus, so each returned row equals the full run's row for that id
-    (parity-tested; the same seam as :func:`self_dedup_trim`).  Note the
-    restricted run is a VERDICT-for-a-subset, not a dedup of the subset:
-    ``kept`` still means "no smaller-id doc in the FULL corpus shares a
-    span".
-
-    Returns one row per input doc:
-    ``(id, n_dup_partners, n_dup_starts, n_dup_chars, kept)``.
+    ``later_ids`` (one ``id_col`` column) returns only those docs' rows,
+    each equal to the full run's row: the earlier side and the hot
+    statistics stay the whole corpus.
     """
     hits = _self_dedup_hits(
         docs, id_col, text_col, min_span, k, max_fp_df, algo, doc_fps,
-        hot_fp_mode, later_ids=later_ids,
+        later_ids, partners=True,
     )
-    # ONE aggregation for partners + start union (r18; was two groupBys +
-    # a pair-stream distinct + a join): the distinct start positions dedupe
-    # inside the per-doc array, the partner count is the one genuinely
-    # DISTINCT aggregate.  Union-of-intervals length over sorted starts
-    # s_1..s_m covers Σ min(min_span, s_j − s_{j−1}) + min_span.
-    # collect_set, not array_distinct(collect_list(...)) (r19, ADVICE
-    # r18): the set dedupes INSIDE the aggregation buffer (and map-side,
-    # in the partial aggregate), so a template doc with thousands of
-    # near-duplicate partners buffers at most its distinct positions —
-    # the list buffered the full positions × partners hit stream.  Same
-    # value: _i is never NULL, and sort_array normalizes the order.
+    # collect_set dedupes positions inside the aggregation buffer; the
+    # union of intervals over sorted starts s_1..s_m covers
+    # min_span + Σ min(min_span, s_j − s_{j−1}) chars
     verdict = (
         hits.groupBy("_idb")
         .agg(
@@ -1888,7 +1851,7 @@ def self_dedup_substring(
             F.sort_array(F.collect_set("_i")).alias("_sv"),
         )
         .select(
-            "_idb",
+            F.col("_idb").alias(id_col),
             "n_dup_partners",
             F.size("_sv").cast("long").alias("n_dup_starts"),
             F.expr(
@@ -1900,16 +1863,13 @@ def self_dedup_substring(
             ).alias("n_dup_chars"),
         )
     )
-    base = docs.select(id_col)
-    if later_ids is not None:
-        base = base.join(later_ids.select(id_col), id_col, "left_semi")
-    return base.join(
-        verdict.withColumnRenamed("_idb", id_col), id_col, "left"
-    ).select(
+    base = _only(docs.select(id_col), id_col, later_ids, id_col)
+    return base.join(verdict, id_col, "left").select(
         id_col,
-        F.coalesce("n_dup_partners", F.lit(0)).cast("long").alias("n_dup_partners"),
-        F.coalesce("n_dup_starts", F.lit(0)).cast("long").alias("n_dup_starts"),
-        F.coalesce("n_dup_chars", F.lit(0)).cast("long").alias("n_dup_chars"),
+        *[
+            F.coalesce(c, F.lit(0)).cast("long").alias(c)
+            for c in ("n_dup_partners", "n_dup_starts", "n_dup_chars")
+        ],
         F.col("n_dup_partners").isNull().alias("kept"),
     )
 
@@ -1923,256 +1883,25 @@ def self_dedup_kept(
     max_fp_df: "int | None" = None,
     algo: str = "xxhash64",
     doc_fps: "DataFrame | None" = None,
-    hot_fp_mode: str = "rekey",
     later_ids: "DataFrame | None" = None,
 ) -> DataFrame:
-    """The ``kept`` verdict of :func:`self_dedup_substring` ALONE —
-    ``(id, kept)``, one row per input doc — for callers that gate on the
-    drop verdict and never read the partner/start/char counts (curate()'s
-    ``self_dedup_span`` stage consumes exactly this; r19, VERDICT r18
-    task 3).
+    """The ``kept`` column of :func:`self_dedup_substring` alone:
+    ``(id, kept)``, one row per input doc (or per ``later_ids`` id),
+    equal to that operator's column.  Arguments are the same.
 
-    ``kept`` is byte-identical to the full operator's column
-    (parity-tested): it only needs hit EXISTENCE per later doc, so the
-    hot-fingerprint gram join runs with ``collapse_earlier`` — ONE
-    min-carrier row per distinct gram instead of one row per (carrier,
-    gram) — and the hit stream reduces to a distinct id set instead of
-    the partner-count + position-union aggregation.  Existence is
-    preserved by the collapse (``min carrier < _idb`` ⟺ any carrier
-    earlier — :func:`_self_dedup_hits` docstring), which is exactly why
-    the full operator CANNOT use it: ``n_dup_partners`` needs the whole
-    carrier set.  All knobs behave as in :func:`self_dedup_substring`.
+    Only hit existence is needed, so the hot gram join keeps one witness
+    row per distinct gram instead of every earlier carrier, which bounds
+    it by the corpus positions on template-heavy corpora.
     """
     hits = _self_dedup_hits(
         docs, id_col, text_col, min_span, k, max_fp_df, algo, doc_fps,
-        hot_fp_mode, later_ids=later_ids, collapse_earlier=True,
+        later_ids, partners=False,
     )
     dropped = hits.select(F.col("_idb").alias(id_col)).distinct()
-    base = docs.select(id_col)
-    if later_ids is not None:
-        base = base.join(later_ids.select(id_col), id_col, "left_semi")
+    base = _only(docs.select(id_col), id_col, later_ids, id_col)
     return base.join(
         dropped.withColumn("_sd_hit", F.lit(True)), id_col, "left"
     ).select(id_col, F.col("_sd_hit").isNull().alias("kept"))
-
-
-def _self_dedup_hits(
-    docs: DataFrame,
-    id_col: str,
-    text_col: str,
-    min_span: int,
-    k: int,
-    max_fp_df: "int | None",
-    algo: str,
-    doc_fps: "DataFrame | None",
-    hot_fp_mode: str,
-    later_ids: "DataFrame | None" = None,
-    collapse_earlier: bool = False,
-) -> DataFrame:
-    """The shared candidate→verify machinery of :func:`self_dedup_substring`
-    and :func:`self_dedup_trim` (extracted r17): every (later doc, earlier
-    doc, 1-based start position) triple where the later doc's
-    ``min_span``-gram at that position occurs verbatim in the earlier doc —
-    winnow-fingerprint candidate pairs + per-pair verify, with the
-    ``max_fp_df`` hot-fingerprint rekey/drop split.  Returns
-    ``(_idb, _ida, _i)`` (may contain duplicate triples from the hot gram
-    join — consumers aggregate with distinct).
-
-    ``collapse_earlier`` (r18, perf only): a consumer that never reads the
-    partner id (the trim's interval union is over ``(_idb, _i)`` alone)
-    sets this to reduce the hot gram join's build side to ONE row per
-    distinct gram — the minimum carrier id stands in for the carrier set,
-    and ``min < _idb`` holds iff ANY carrier is earlier.  The join output
-    is then bounded by the position count instead of positions × carriers
-    (quadratic on template corpora).  ``_ida`` in the returned triples is
-    then a witness, NOT the full partner set — never count partners from a
-    collapsed run.
-
-    ``later_ids`` (r18, one ``{id_col}`` column) restricts the LATER
-    (``_idb``) side: candidate pairs, per-pair verifies, and the hot gram
-    join only produce triples whose later doc is in the set, while the
-    EARLIER side — and the hot-fingerprint document-frequency statistics —
-    still range over the full corpus, so the hits for every restricted
-    doc are exactly the full run's hits for that doc (parity-tested).
-    This is the trim-survivors-only seam: a curation funnel that drops a
-    third of the corpus has no use for those docs' surgery."""
-    if min_span < k + 1:
-        raise ValueError(
-            f"min_span must be >= k + 1 (= {k + 1}) so the winnow window "
-            f"w = min_span - k + 1 is >= 2, got min_span={min_span}"
-        )
-    if max_fp_df is not None and int(max_fp_df) < 1:
-        raise ValueError(
-            f"max_fp_df must be >= 1 when given (got {max_fp_df}): a "
-            "zero/negative threshold marks every fingerprint hot — in "
-            "drop mode the dedup pass would then flag nothing while "
-            "appearing to run"
-        )
-    if hot_fp_mode not in ("rekey", "drop"):
-        raise ValueError(
-            f"hot_fp_mode must be 'rekey' or 'drop', got {hot_fp_mode!r}"
-        )
-    w = min_span - k + 1
-    if doc_fps is not None:
-        _check_winnow_fps(doc_fps, id_col, k, w, algo, text_col)
-        fp = doc_fps.select(id_col, "fp").where(F.col("fp").isNotNull())
-    else:
-        fp = winnow_fingerprints(docs, id_col, text_col, k=k, w=w, algo=algo).where(
-            F.col("fp").isNotNull()
-        )
-    hits_hot = None
-    aff = None
-    if max_fp_df is not None:
-        hot = (
-            fp.groupBy("fp")
-            .agg(F.count(F.lit(1)).alias("_df"))
-            .where(F.col("_df") > max_fp_df)
-            .select("fp")
-        )
-        if hot_fp_mode == "rekey":
-            aff = (
-                fp.join(F.broadcast(hot), "fp", "left_semi")
-                .select(id_col).distinct()
-            )
-            # widen the SCAN, then semi-join (r18): the gram explode below
-            # is the heavy map stage, and a broadcast semi-join output
-            # inherits the scan's (possibly single-split) partitioning —
-            # while probing the JOINED frame would finalize the AQE plan
-            # and execute the whole aff subtree eagerly (scale_out
-            # docstring).  The id-keyed repartition is satisfied by any
-            # later id-keyed shuffle, and is a cluster no-op.
-            from tikv_data_compare_spark.session import scale_out
-
-            wdocs = scale_out(docs.select(id_col, text_col), key=id_col)
-            adocs = wdocs.join(aff, id_col, "left_semi")
-            # positional grams of the LATER doc join the distinct gram
-            # sets of the EARLIER — one bounded gram equi-join computes
-            # the complete hit triples for every affected×affected pair
-            # (gram equality IS the verbatim check, so no verify pass).
-            # The _ida gram-set side stays the FULL affected set; only
-            # the positional _idb side narrows under later_ids.
-            bdocs = adocs
-            if later_ids is not None:
-                bdocs = adocs.join(
-                    later_ids.select(id_col), id_col, "left_semi"
-                )
-            grams_pos = _span_grams(bdocs, id_col, text_col, min_span, with_pos=True)
-            if collapse_earlier:
-                # the consumer never reads the partner id: one row per
-                # DISTINCT gram with its minimum carrier replaces the
-                # per-(carrier, gram) set — "min carrier < _idb" holds iff
-                # any carrier is earlier, and the join output collapses
-                # from positions × carriers (quadratic on template
-                # corpora) to at most one row per position.  The join key
-                # is the gram's 64-bit hash and the POSITION side ships
-                # ONLY (id, i, hash) — roughly half the shuffle bytes of
-                # carrying the span string — while exactness is restored
-                # by rebuilding the later doc's gram from (id, i) and
-                # comparing it to the set row's string: a hash collision
-                # fails the comparison, and every true hit matches its own
-                # gram's (hash, string) row.  The verify join is keyed by
-                # the later id, the same key the downstream hit
-                # aggregation shuffles on.
-                grams_set = (
-                    _span_grams(adocs, id_col, text_col, min_span)
-                    .groupBy("gram")
-                    .agg(F.min(id_col).alias("_ida"))
-                    .select(
-                        F.xxhash64("gram").alias("_gh"),
-                        F.col("gram").alias("_gs"),
-                        "_ida",
-                    )
-                )
-                pos_slim = grams_pos.select(
-                    F.col(id_col).alias("_idb"),
-                    "_i",
-                    F.xxhash64("gram").alias("_gh"),
-                )
-                bt = docs.select(
-                    F.col(id_col).alias("_idb"), F.col(text_col).alias("_bt")
-                )
-                hits_hot = (
-                    pos_slim.join(grams_set, "_gh")
-                    .where(F.col("_ida") < F.col("_idb"))
-                    .join(bt, "_idb")
-                    .where(
-                        F.expr(f"substr(_bt, _i, {min_span})") == F.col("_gs")
-                    )
-                    .select("_idb", "_ida", "_i")
-                )
-            else:
-                grams_set = _span_grams(
-                    adocs, id_col, text_col, min_span
-                ).select(F.col(id_col).alias("_ida"), "gram").distinct()
-                hits_hot = (
-                    grams_pos.select(F.col(id_col).alias("_idb"), "_i", "gram")
-                    .join(grams_set, "gram")
-                    .where(F.col("_ida") < F.col("_idb"))
-                    .select("_idb", "_ida", "_i")
-                )
-        fp = fp.join(hot, "fp", "left_anti")
-    if hits_hot is not None:
-        # both-affected pairs are COMPLETE in the gram join.  Exclude them
-        # BEFORE the candidate distinct: the affected flag rides the fp
-        # rows into the self-join, so excluded pairs die inline in the
-        # join stage (codegen filter) instead of surviving into a
-        # pair-level distinct + two pair-stream joins — on the template
-        # corpora the hot path exists for, MOST candidate pairs are
-        # both-affected (sf0.1 fixture: ~1M distinct pairs built, every
-        # one then dropped by the post-distinct filter in the r17 shape).
-        fp = fp.join(aff.withColumn("_aff", F.lit(True)), id_col, "left")
-        a = fp.select(F.col(id_col).alias("_ida"), "fp", F.col("_aff").alias("_affa"))
-        fp_b = fp
-        if later_ids is not None:
-            fp_b = fp.join(later_ids.select(id_col), id_col, "left_semi")
-        b = fp_b.select(F.col(id_col).alias("_idb"), "fp", F.col("_aff").alias("_affb"))
-        cand = (
-            a.join(b, "fp")
-            .where(
-                (F.col("_ida") < F.col("_idb"))
-                & ~(
-                    F.coalesce(F.col("_affa"), F.lit(False))
-                    & F.coalesce(F.col("_affb"), F.lit(False))
-                )
-            )
-            .select("_ida", "_idb")
-            .distinct()
-        )
-    else:
-        a = fp.select(F.col(id_col).alias("_ida"), "fp")
-        fp_b = fp
-        if later_ids is not None:
-            fp_b = fp.join(later_ids.select(id_col), id_col, "left_semi")
-        b = fp_b.select(F.col(id_col).alias("_idb"), "fp")
-        cand = (
-            a.join(b, "fp")
-            .where(F.col("_ida") < F.col("_idb"))
-            .select("_ida", "_idb")
-            .distinct()
-        )
-    texts = docs.select(F.col(id_col), F.col(text_col))
-    pairs = cand.join(
-        texts.select(F.col(id_col).alias("_ida"), F.col(text_col).alias("_at")),
-        "_ida",
-    ).join(
-        texts.select(F.col(id_col).alias("_idb"), F.col(text_col).alias("_bt")),
-        "_idb",
-    )
-    # sequence(1, n) DESCENDS for n < 1 and length(NULL) is NULL → guard both
-    starts = pairs.withColumn(
-        "_ss",
-        F.expr(
-            f"CASE WHEN length(_at) >= {min_span} AND length(_bt) >= {min_span} "
-            f"THEN filter(sequence(1, length(_bt) - {min_span} + 1), "
-            f"i -> contains(_at, substr(_bt, i, {min_span}))) "
-            f"ELSE CAST(array() AS array<int>) END"
-        ),
-    )
-    hit = starts.where(F.size("_ss") > 0)
-    hits = hit.select("_idb", "_ida", F.explode("_ss").alias("_i"))
-    if hits_hot is not None:
-        hits = hits.unionByName(hits_hot)
-    return hits
 
 
 def self_dedup_trim(
@@ -2184,98 +1913,49 @@ def self_dedup_trim(
     max_fp_df: "int | None" = None,
     algo: str = "xxhash64",
     doc_fps: "DataFrame | None" = None,
-    hot_fp_mode: str = "rekey",
     snap: str = "none",
     later_ids: "DataFrame | None" = None,
 ) -> DataFrame:
-    """Span-SURGICAL ExactSubstr dedup (r17): instead of DROPPING a doc
-    that shares a verbatim span of ≥ ``min_span`` chars with a smaller-id
-    doc (:func:`self_dedup_substring`), CUT the duplicated spans out of
-    the later doc's text — the removal mode Lee et al. 2021 actually run
-    ("Deduplicating Training Data Makes Language Models Better": they
-    excise the duplicated substring, keeping the rest of the document).
+    """Span-surgical ExactSubstr dedup (the removal mode of Lee et al.
+    2021): instead of dropping a doc that shares verbatim spans of
+    ``>= min_span`` chars with smaller-id docs, cut those spans out of
+    its text.  Smaller-id carriers keep their text whole, so one copy of
+    each duplicated span survives.  Not idempotent: a cut can join text
+    into a new duplicate; iterate externally for a fixpoint.
 
-    Same machinery, same keep rule orientation: the candidate→verify
-    chain (:func:`_self_dedup_hits` — winnow fingerprints, pair verify,
-    hot-fingerprint rekey split, all knobs shared with the drop
-    operator) yields every 1-based start ``i`` in the LATER doc whose
-    ``min_span``-gram occurs in a smaller-id doc; the union of intervals
-    ``[i, i+min_span)`` is removed by one sorted-starts fold (O(chars),
-    map-side after the per-doc collect_list — the same shape as the drop
-    operator's ``n_dup_chars`` interval algebra, building the kept
-    segments instead of counting the cut ones).  EARLIER docs keep their
-    text whole (globally-first, like the drop rule), so the surviving
-    corpus retains exactly one copy of every duplicated span family
-    carrier chain's head occurrence.
+    Returns one row per input doc (or per ``later_ids`` id, each equal to
+    the full run's row), ``(id, text_trimmed, n_trimmed_chars,
+    kept_intact)``: the text with the union of ``[i, i + min_span)``
+    removed over every hit start ``i`` (NULL stays NULL), the removed
+    char count, and whether nothing was cut (equal to
+    :func:`self_dedup_substring`'s ``kept``).  The other arguments are
+    as in :func:`self_dedup_substring`; the hot gram join keeps one
+    witness per distinct gram, since only the starts are needed.
 
-    NOT idempotent by design: cutting spans can create new adjacencies
-    that themselves form ≥ min_span duplicates — Lee et al. run one
-    pass; iterate externally if a fixpoint is wanted.
+    ``snap`` sets the cut boundaries:
 
-    ``snap`` (r18, VERDICT r17 task 4) controls cut-boundary hygiene:
-
-    * ``"none"`` (default — the paper's span semantics and the gated
-      path): remove exactly the covered intervals, even mid-word — the
-      splice can join two word fragments into a new token.
-    * ``"word"``: extend each removed interval to the enclosing
-      whitespace boundaries before merging, so no WORD is ever
-      partially removed — an edge that splits a run of non-whitespace
-      extends outward to the nearest whitespace (or the text edge) on
-      that side; edges already on whitespace (or against it) stay put.
-      Deterministic interval algebra over the doc's whitespace-position
-      array (the six ASCII chars of Java-regex ``\\s``: tab, LF, VT, FF,
-      CR, space): for a raw interval ``[s, e]``,
-      ``l = prevWS(s)+1`` iff chars ``s-1`` and ``s`` are both
-      non-whitespace else ``s``; ``r = nextWS(e)-1`` iff chars ``e`` and
-      ``e+1`` are both non-whitespace else ``e``.  Whitespace BETWEEN
-      removed words is kept (cuts never merge across it unless covered),
-      so the splice is always whitespace-delimited.  Snapping can only
-      remove MORE characters, and ``kept_intact`` is unchanged (it
-      reports whether any span hit the doc, not how wide the cut was).
-
-    ``later_ids`` (r18, one ``{id_col}`` column) trims ONLY those docs —
-    one output row per id in the set — while the dedup REFERENCE (the
-    earlier-carrier side and the hot-fingerprint statistics) stays the
-    full ``docs`` corpus, so each returned row is byte-identical to the
-    full run's row for that id (parity-tested).  This is the funnel
-    seam: ``curate()`` trims survivors only, skipping the candidate and
-    verify work for docs its gates already dropped (~a third of the sf1
-    fixture corpus — tools/probe_trim_funnel_sf1_runs.jsonl).
-
-    Returns one row per input doc (schema mirrors the drop operator's
-    verdict shape, with the surgery added):
-    ``(id, text_trimmed, n_trimmed_chars, kept_intact)`` —
-    ``text_trimmed`` is the doc's text with covered intervals removed
-    (NULL text stays NULL), ``n_trimmed_chars`` the removed char count
-    (with ``snap="none"`` provably equal to ``self_dedup_substring``'s
-    ``n_dup_chars`` — equivalence-tested; with ``snap="word"`` ≥ that),
-    ``kept_intact`` true iff nothing was cut
-    (equal to the drop operator's ``kept``)."""
+    * ``"none"``: remove exactly the covered intervals, even mid-word.
+      ``n_trimmed_chars`` then equals ``n_dup_chars``.
+    * ``"word"``: widen each merged interval to whitespace so no word is
+      partly removed.  For ``[s, e]``, ``s`` moves to just after the
+      previous whitespace iff chars ``s-1`` and ``s`` are both
+      non-whitespace, and ``e`` to just before the next whitespace iff
+      chars ``e`` and ``e+1`` are; whitespace is the six ASCII chars of
+      Java-regex ``\\s``.  Removes at least as much as ``"none"``.
+    """
     if snap not in ("none", "word"):
         raise ValueError(f"snap must be 'none' or 'word', got {snap!r}")
     hits = _self_dedup_hits(
         docs, id_col, text_col, min_span, k, max_fp_df, algo, doc_fps,
-        hot_fp_mode, later_ids=later_ids,
-        # the trim never reads the partner id — collapse the hot gram
-        # join's build side to one min-carrier row per distinct gram
-        # (r18 perf; _self_dedup_hits docstring)
-        collapse_earlier=True,
+        later_ids, partners=False,
     )
-    # ONE aggregation (r18): dedupe the start positions inside the per-doc
-    # array instead of a pair-stream-wide distinct + second shuffle — the
-    # per-doc start sets are small (≤ doc length), the hit stream is not.
-    # collect_set (r19, ADVICE r18): dedup happens inside the aggregation
-    # buffer (map-side too), bounding it at the distinct positions — the
-    # cold verify path still emits one row per (partner, position), so the
-    # list form buffered positions × partners on duplicate-dense docs.
+    # one aggregation; collect_set dedupes the starts inside the buffer
     sv = (
         hits.groupBy("_idb")
         .agg(F.sort_array(F.collect_set("_i")).alias("_sv"))
         .withColumnRenamed("_idb", id_col)
     )
-    base = docs
-    if later_ids is not None:
-        base = docs.join(later_ids.select(id_col), id_col, "left_semi")
+    base = _only(docs, id_col, later_ids, id_col)
     out = base.select(id_col, F.col(text_col).alias("_t")).join(sv, id_col, "left")
     if snap == "none":
         # fold sorted starts into the trimmed text: acc.p = the next
@@ -2295,19 +1975,13 @@ def self_dedup_trim(
             f"acc -> concat(acc.t, substr(_t, CAST(acc.p AS INT))))"
         )
     else:
-        # word-snapped surgery (r18): merge the raw [s, s+min_span)
-        # intervals FIRST (one fold over the sorted starts — merged runs
-        # are typically far fewer than starts on duplicate-dense docs),
-        # then snap only the merged runs' edges.  Equivalent to snapping
-        # every raw interval: an interior edge's extension stops at the
-        # nearest whitespace, which either lies inside the merged run
-        # (absorbed by the union) or coincides with the outer edge's
-        # extension target (no whitespace in between ⇒ same prevWS /
-        # nextWS) — the brute-force parity test pins this empirically.
-        # The whitespace-position array is materialized once per hit doc
-        # with an ascii() class test (the 6 Java-regex \s chars: 9-13,
-        # 32) — a per-char regex measured ~4.5× the whole operator at
-        # sf1 before this shape (probe_snap_sf1).
+        # merge the raw [s, s+min_span) intervals first, then snap only the
+        # merged runs' edges.  Equivalent to snapping every raw interval:
+        # an interior edge's extension stops at the nearest whitespace,
+        # which either lies inside the merged run or coincides with the
+        # outer edge's target.  The whitespace positions are materialized
+        # once per hit doc with an ascii() class test (9-13, 32), which is
+        # far cheaper than a per-char regex.
         out = out.withColumn(
             "_wsv",
             F.expr(

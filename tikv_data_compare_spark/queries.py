@@ -756,18 +756,6 @@ def q_fk_orphans(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out
 
 
-def _oracle_fk_orphans() -> str:
-    parts = []
-    for name, child, ck, parent, pk in FK_RELATIONS:
-        parts.append(
-            f"""SELECT '{name}' AS relation,
-       CAST((SELECT count(*) FROM {child} c WHERE NOT EXISTS
-             (SELECT 1 FROM {parent} p WHERE p.{pk} = c.{ck})) AS BIGINT) AS n_orphans,
-       CAST((SELECT count(*) FROM {child}) AS BIGINT) AS n_child_rows"""
-        )
-    return "\nUNION ALL\n".join(parts)
-
-
 PROFILE_COLS = ["o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice", "o_orderdate", "o_orderpriority"]
 
 

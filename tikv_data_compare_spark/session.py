@@ -91,18 +91,17 @@ def scale_out(df, key: str | None = None):
     On a real cluster reading 100 TB the input has ~1e5 splits, the condition
     is false, and this is a no-op — no shuffle is ever inserted at scale.
 
-    r18 (measured via the stage API on the curation row): under AQE,
-    ``DataFrame.rdd`` FINALIZES the adaptive plan, which MATERIALIZES every
-    upstream shuffle stage as real jobs — probing a join-shaped frame here
-    executed its whole candidate subtree eagerly (15+ cpu-s per probe on
-    the trim path) and then the actual query re-ran it.  The probe is only
+    Under AQE, ``DataFrame.rdd`` FINALIZES the adaptive plan, which
+    MATERIALIZES every upstream shuffle stage as real jobs — probing a
+    join-shaped frame would execute its whole subtree eagerly, and the
+    actual query would then run it again.  The probe is only
     safe — and only needed — on shuffle-FREE plans (scans + maps), where
     file splitting alone sets the width; a frame below any shuffle already
     runs at ``spark.sql.shuffle.partitions``/AQE-advisory width, so it is
     returned unchanged without touching ``.rdd``.  Callers that feed a
     CPU-heavy map stage from a small broadcast-join output (whose
-    partitioning is the scan's) widen the SCAN before joining instead —
-    see operators/text._self_dedup_hits and operators/curate.
+    partitioning is the scan's) widen the SCAN before joining instead, as
+    the corpus self-match in operators/text and curate() do.
     """
     from pyspark.sql import functions as F
 

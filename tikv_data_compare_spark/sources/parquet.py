@@ -12,7 +12,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from tikv_data_compare_spark.model import Keyed, to_kv, unique_by_key
+from tikv_data_compare_spark.model import Keyed, unique_by_key
 
 TABLE_KEYS: dict[str, tuple[str, ...]] = {
     "region": ("r_regionkey",),
@@ -51,9 +51,3 @@ def load_keyed(
     if ensure_unique and name in NON_UNIQUE_KEYS:
         k = Keyed(unique_by_key(k.df, list(keys)), k.keys, k.values)
     return k
-
-
-def load_kv(spark: SparkSession, sf_dir: str, name: str = "lineitem") -> Keyed:
-    """Reference-faithful binary KV rendering of a fixture table."""
-    k = load_keyed(spark, sf_dir, name)
-    return Keyed(to_kv(k.df, list(k.keys), list(k.values)))
