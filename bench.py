@@ -75,10 +75,10 @@ def proc_tree_cpu_sec(root: int | None = None) -> float:
     bench's timing loop additionally RESAMPLES when a window delta
     comes back negative (see the anomaly guard there).
 
-    The r16 A/B probe (tools/probe_ab_tfidf_load.py) proved the cgroup
-    counter (container_cpu_sec in main) has a hole the r15 tfidf drift
-    fell into: it is CONTAINER-wide, so any sibling process running during
-    a timed query (a concurrent pytest, the judge's probe load) inflates
+    An A/B measurement (BASELINE.md, "cgroup cpu is NOT sibling-proof")
+    showed the cgroup counter (container_cpu_sec in main) has a hole: it
+    is CONTAINER-wide, so any sibling process running during a timed
+    query (a concurrent pytest or load generator) inflates
     the per-query delta ~1:1 — measured: 8 in-container burners added
     exactly their burn (16.4 vs 8.3 cpu-s) to the cgroup delta while
     this metric stayed flat.  Attribution doctrine: use cpu_proc_sec
@@ -99,8 +99,8 @@ class ProcTreeCpuMeter:
     vanishes from every instantaneous /proc walk.  Measured: the sf1
     suite's workers carried ~800 cpu-s; whichever entry happened to span
     the 60-s idle boundary ate a negative delta that size
-    (BENCH_sf1 r17 run A: diff_full_1pct −1374; run B: −821 — the probe
-    in tools/ watched 16 workers leave the tree with zero cutime growth).
+    (BENCH_sf1 r17 run A: diff_full_1pct −1374; run B: −821 — a one-off
+    probe watched 16 workers leave the tree with zero cutime growth).
 
     The meter samples the live tree and REMEMBERS every (pid, starttime)
     it has seen with its last cpu reading; when one disappears (or its
@@ -457,7 +457,6 @@ def main():
     #      the next timed run ("Retried waiting for GCLocker too often" in the
     #      JVM log).  Min-of-3 exists to discard such a stalled run — one
     #      deferred GC can't poison all three.
-    from tikv_data_compare_spark.operators import curate as cur
 
     def loadavg_1m() -> float:
         try:
@@ -548,7 +547,6 @@ def main():
     # ONE meter for the whole suite: it has to see every worker ALIVE to
     # credit its cpu when the idle reaper kills it (class docstring)
     cpu_meter = ProcTreeCpuMeter()
-    stages: dict[str, float] = {}
     load_seen = [loadavg_1m()]
     for name in names:
         fn = benches[name]
@@ -595,12 +593,6 @@ def main():
                     )
                 elif name in cpu_proc_anomalies:
                     del cpu_proc_anomalies[name]
-            # stage-level visibility into the suite's dominant entry: keep the
-            # per-stage min across runs (same steady-state rule as the total)
-            if name == "curation_pipeline":
-                for k, v in cur.LAST_STAGE_TIMINGS.items():
-                    sk = f"curation_{k}"
-                    stages[sk] = min(stages.get(sk, v), v)
         if debug:
             print(f"[bench] {name}: runs={runs}", file=sys.stderr)
         timings[name] = round(best, 3)
@@ -690,7 +682,6 @@ def main():
                 "value_ex_quadratic_exemplar": total_ex_exemplar,
                 "unit": "sec",
                 "queries": timings,
-                "stages": stages,
                 "core10_total": round(sum(timings[n] for n in core10 if n in timings), 3),
                 "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
                 "cpus": cpus,

@@ -50,3 +50,22 @@ def kv_pair(spark, lineitem):
     dst = Keyed(to_kv(dst_t, ["l_orderkey", "l_linenumber"]).cache())
     src.df.count(), dst.df.count()  # materialize once
     return src, dst
+
+
+@pytest.fixture
+def cache_entries(spark):
+    """Callable returning how many frames the session's CacheManager holds
+    (one entry per ``persist()``/``cache()`` not yet unpersisted).  The
+    CacheManager exposes only ``isEmpty()``, and session fixtures keep
+    frames cached for the whole run, so a non-empty count is read from its
+    ``cachedData`` field."""
+    cm = spark._jsparkSession.sharedState().cacheManager()
+
+    def count() -> int:
+        if cm.isEmpty():
+            return 0
+        field = cm.getClass().getDeclaredField("cachedData")
+        field.setAccessible(True)
+        return field.get(cm).size()
+
+    return count

@@ -1074,6 +1074,28 @@ def test_cli_imagehash(capsys, spark, tmp_path):
     assert spark.read.parquet(out).count() == 3
 
 
+def test_cli_imagehash_error_path_releases_hashes(spark, tmp_path, monkeypatch, cache_entries):
+    """The persisted hash frame is released when the pair stage raises."""
+    from test_dhash_index import _png_rows
+    from test_multimodal import _gradient_png
+
+    from tikv_data_compare_spark.operators import multimodal
+
+    src = str(tmp_path / "imgs.pq")
+    _png_rows(
+        spark, [(1, bytearray(_gradient_png(32, 32))), (2, bytearray(b"junk"))]
+    ).write.mode("overwrite").parquet(src)
+
+    def failing_pairs(*a, **kw):
+        raise RuntimeError("injected pair failure")
+
+    monkeypatch.setattr(multimodal, "dhash_pairs", failing_pairs)
+    before = cache_entries()
+    with pytest.raises(RuntimeError, match="injected pair failure"):
+        cli.main(["imagehash", "--src", src, "--pairs"])
+    assert cache_entries() == before
+
+
 def test_cli_ingest_and_imagehash_flag_guards(capsys, spark, tmp_path):
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet").limit(5)
     src = str(tmp_path / "g.pq")

@@ -40,12 +40,7 @@ def _docs(spark):
 
 
 def test_curate_stages_drop_planted_offenders(spark):
-    from tikv_data_compare_spark.operators import curate as cur_mod
-
     kept, attrition = curate(_docs(spark))
-    # bench.py's per-stage visibility depends on these keys existing
-    assert set(cur_mod.LAST_STAGE_TIMINGS) == {"funnel_flags_agg", "kept_materialize"}
-    assert all(v >= 0 for v in cur_mod.LAST_STAGE_TIMINGS.values())
     kept_ids = {r["doc_id"] for r in kept.collect()}
     assert kept_ids == {1, 6}
     rep = {r["stage"]: (r["n_in"], r["n_out"], r["n_dropped"]) for r in attrition.collect()}
@@ -165,26 +160,6 @@ def test_curate_decontam_max_fp_df_passthrough(spark):
     # loud validation, the bloom-knob convention
     with pytest.raises(ValueError, match="decontam_max_fp_df requires"):
         curate(docs, decontam_max_fp_df=50)
-
-
-def test_curate_releases_broadcasts_and_returns_persisted_handle(spark):
-    """After curate(): no live operator-module broadcasts (long-lived
-    sessions looping curate must not accumulate executor blocks), and the
-    returned kept frame is persisted — the caller's release handle."""
-    from tikv_data_compare_spark.operators import similarity as sim_mod
-
-    # plant a tracked broadcast from an unrelated operator in the session
-    sim_mod.lsh_buckets(
-        spark.createDataFrame([(0, [1.0, 2.0])], "vec_id long, embedding array<double>"),
-        n_planes=2, dim=2,
-    ).count()
-    assert len(sim_mod._LIVE_BROADCASTS) >= 1
-    kept, attrition = curate(_docs(spark))
-    assert sim_mod._LIVE_BROADCASTS == []
-    assert kept.is_cached
-    assert {r["doc_id"] for r in kept.collect()} == {1, 6}
-    kept.unpersist()
-    assert not kept.is_cached
 
 
 def test_curate_language_gate(spark):

@@ -515,18 +515,29 @@ def test_token_mixture_broadcasts_rates(spark, documents):
     assert "CartesianProduct" not in s
 
 
-def test_dsir_weights_broadcasts_bucket_tables(spark, documents):
+def test_dsir_weights_broadcasts_bucket_tables(spark, documents, monkeypatch):
     """The driver-built literal weight table broadcasts into the scoring
     join, and the persisted (id, bucket, count) aggregate is READ FROM
-    CACHE by the scoring pass (r14) — the explode+md5 map stage, the
-    operator's dominant cost, runs exactly once (the bucket-count collect
+    CACHE by the scoring pass — the explode+md5 map stage, the operator's
+    dominant cost, runs exactly once (the bucket-count collect
     materialized it).  No sqrt chain and no decimal anywhere: the frozen
-    costs are Python-computed literals (the zero-float gate)."""
+    costs are Python-computed literals (the zero-float gate).  The scoring
+    runs inside the call and the result is a local checkpoint, so the plan
+    checked is the one the checkpoint executed."""
     from tikv_data_compare_spark.operators.sampling import dsir_weights
 
+    checkpointed = []
+    real = type(documents).localCheckpoint
+
+    def capturing(self, *a, **kw):
+        checkpointed.append(self)
+        return real(self, *a, **kw)
+
+    monkeypatch.setattr(type(documents), "localCheckpoint", capturing)
     docs = documents.select("doc_id", "text").limit(300)
     target = documents.select("doc_id", "text").limit(100)
-    df = dsir_weights(docs, target, n_buckets=256)
+    dsir_weights(docs, target, n_buckets=256)
+    (df,) = checkpointed
     assert "BroadcastHashJoin" in plans.join_strategies(df)
     assert plans.has_partial_aggregation(df)
     s = plans.plan_string(df)

@@ -61,28 +61,3 @@ def test_swap_candidates_stay_ready():
     assert callable(qe.q_sampling_dsir)
     assert "token_budget" in qe.ORACLE_SAMPLING_PREFIX
     assert "dsir" in qe.oracle_sampling_dsir("/root/testdata/sf0.001")
-
-
-def test_queries_ext_cache_registry_releases_all(spark):
-    """r17 (ADVICE): q_text_fingerprints' shared winnow cache registers in
-    the module-level _QUERY_CACHES registry (the dsir pattern), so a
-    long-lived session can free every persisted frame even after callers
-    composed away the ad-hoc .fps_cache attribute.  Plan-building only —
-    no action runs, persist() is lazy."""
-    import os
-
-    from tikv_data_compare_spark import queries_ext as qe
-
-    sf_dir = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
-    qe.release_all_query_caches()  # clean slate
-    before = len(qe._QUERY_CACHES)
-    assert before == 0
-    out = qe.q_text_fingerprints(spark, sf_dir)
-    assert len(qe._QUERY_CACHES) == 1
-    # the ad-hoc attribute still rides on the exact returned object ...
-    assert out.fps_cache is qe._QUERY_CACHES[0]
-    # ... but ANY transformation loses it — the registry is the durable path
-    assert not hasattr(out.select("doc_id"), "fps_cache")
-    assert qe.release_all_query_caches() == 1
-    assert qe._QUERY_CACHES == []
-    assert qe.release_all_query_caches() == 0  # registry drained

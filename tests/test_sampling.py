@@ -505,57 +505,15 @@ def test_dsir_weights_seam_rejects_mismatched_build_params(spark):
     assert dsir_sample(docs, None, tau_c=0, n_buckets=512, weights=bare).count() > 0
 
 
-def test_dsir_cache_handle_release(spark):
-    """Every dsir_weights call persists one (id, bucket, count) frame; the
-    handle rides on the returned frame (and through dsir_sample) so
-    long-lived sessions can release it without clearCache() (ADVICE r14)."""
-    from tikv_data_compare_spark.operators.sampling import (
-        dsir_sample,
-        dsir_weights,
-        release_dsir_cache,
-    )
-
-    docs = _dsir_corpus(spark)
-    target = docs.filter(F.col("doc_id") % 2 == 0)
-    w = dsir_weights(docs, target, n_buckets=512)
-    assert w.dsir_cache.storageLevel.useMemory  # persisted
-    kept = dsir_sample(docs, None, tau_c=0, n_buckets=512, weights=w)
-    kept.count()
-    assert kept.dsir_cache is w.dsir_cache  # propagated, same frame
-    release_dsir_cache(kept)
-    assert not w.dsir_cache.storageLevel.useMemory  # released
-    release_dsir_cache(docs)  # no handle → no-op, no raise
-    # one-call form: the handle is created inside and still reachable
-    kept2 = dsir_sample(docs, target, tau_c=0, n_buckets=512)
-    assert hasattr(kept2, "dsir_cache")
-    release_dsir_cache(kept2)
-
-    # r16 (ADVICE r15): a caller that composes on the returned frame loses
-    # the ad-hoc attribute — the module registry still releases the cache
-    from tikv_data_compare_spark.operators.sampling import (
-        release_all_dsir_caches,
-    )
-
-    w3 = dsir_weights(docs, target, n_buckets=512)
-    composed = w3.filter(F.col("dsir_logw_c").isNotNull())
-    assert not hasattr(composed, "dsir_cache")  # the documented loss
-    rc3 = w3.dsir_cache
-    assert rc3.storageLevel.useMemory
-    assert release_all_dsir_caches() >= 1
-    assert not rc3.storageLevel.useMemory
-    assert release_all_dsir_caches() == 0  # registry drained
-
-
-def test_curate_dsir_gate(spark):
-    """The gate needs docs that pass the upstream Gopher/repetition gates:
-    unique fillers keep dup-word-frac low, one stopword clears the ratio
-    floor, and interleaved style words carry the planted distribution."""
-    from tikv_data_compare_spark.operators.curate import curate
-
+def _curate_dsir_corpus(spark, n_docs=40):
+    """The two-style corpus shaped to pass curate's upstream
+    Gopher/repetition gates: unique fillers keep dup-word-frac low, one
+    stopword clears the ratio floor, and interleaved style words carry the
+    planted distribution."""
     va = "alpha beta gamma delta epsilon zeta".split()
     vb = "zero one two three four five".split()
     rows = []
-    for i in range(40):
+    for i in range(n_docs):
         v = va if i % 2 == 0 else vb
         words = []
         for j in range(10):
@@ -563,7 +521,13 @@ def test_curate_dsir_gate(spark):
             words.append(v[(i * 7 + j * 3) % 6])
         words.append("the")
         rows.append((i, " ".join(words)))
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    return spark.createDataFrame(rows, "doc_id long, text string")
+
+
+def test_curate_dsir_gate(spark):
+    from tikv_data_compare_spark.operators.curate import curate
+
+    docs = _curate_dsir_corpus(spark)
     target = docs.filter((F.col("doc_id") % 2 == 0) & (F.col("doc_id") < 100))
     kept, attrition = curate(docs, dsir_target=target, min_dsir_logw_c=0)
     stages = [r["stage"] for r in attrition.collect()]

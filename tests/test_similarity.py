@@ -162,18 +162,6 @@ def test_embedding_dedup_canonical_chain_and_singleton(spark):
     assert out[10] == (10, 1)
 
 
-def test_release_broadcasts_reclaims_and_refetches(spark, embeddings):
-    from tikv_data_compare_spark.operators import similarity as sim_mod
-
-    buckets = sim_mod.lsh_buckets(embeddings.limit(50), n_planes=4, dim=64)
-    assert buckets.count() == 50
-    assert sim_mod.release_broadcasts() >= 1
-    # unpersist keeps the driver copy: a later action re-ships the blocks
-    assert buckets.count() == 50
-    # idempotent
-    assert sim_mod.release_broadcasts() == 0
-
-
 def test_topk_boundary_tie_determinism(spark):
     """200 identical vectors → every candidate ties at the per-batch cut.
     The kept top-k must be the smallest neighbor ids regardless of how

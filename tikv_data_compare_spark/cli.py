@@ -1139,25 +1139,27 @@ def main(argv: list[str] | None = None) -> int:
             # the Arrow decode pass feeds two counts and both sides of the
             # pair self-join — persist so images decode once
             hashes = hashes.persist()
-        result = {
-            "images": hashes.count(),
-            "decoded": hashes.filter("decoded").count(),
-        }
-        if args.out:
-            result["out"] = args.out
-        if args.pairs:
-            pairs = dhash_pairs(
-                hashes, max_hamming=args.max_hamming, id_col=args.id_col,
-                n_bands=args.n_bands,
-            )
-            if args.pairs_out:
-                pairs.write.mode("overwrite").parquet(args.pairs_out)
-                result["pairs_out"] = args.pairs_out
-                result["pairs"] = spark.read.parquet(args.pairs_out).count()
-            else:
-                result["pairs"] = pairs.count()
-        if not args.out:
-            hashes.unpersist()
+        try:
+            result = {
+                "images": hashes.count(),
+                "decoded": hashes.filter("decoded").count(),
+            }
+            if args.out:
+                result["out"] = args.out
+            if args.pairs:
+                pairs = dhash_pairs(
+                    hashes, max_hamming=args.max_hamming, id_col=args.id_col,
+                    n_bands=args.n_bands,
+                )
+                if args.pairs_out:
+                    pairs.write.mode("overwrite").parquet(args.pairs_out)
+                    result["pairs_out"] = args.pairs_out
+                    result["pairs"] = spark.read.parquet(args.pairs_out).count()
+                else:
+                    result["pairs"] = pairs.count()
+        finally:
+            if not args.out:
+                hashes.unpersist()
         print(json.dumps(result))
         return 0
 
@@ -1718,111 +1720,104 @@ def main(argv: list[str] | None = None) -> int:
         except ValueError as e:
             print(str(e), file=sys.stderr)
             return 2
-    try:
-        if args.cmd == "checksum" and args.algo == "crc64":
-            # two clusters + crc64: the reference's own flow — per-region
-            # coprocessor triples, no row ever crosses the wire (the scan+
-            # Spark path below handles files/dumps and the other algos)
-            v = _coprocessor_verdict(args)
-            if v is not None:
-                print(json.dumps(v, default=str))
-                return 0 if v["equal"] else 1
-
-        src = _keyed(spark, args.src, keys, args)
-
-        if args.cmd == "checksum":
-            from tikv_data_compare_spark.operators.checksum import checksum_verdict
-
-            dst = _keyed(spark, args.dst, keys, args)
-            v = checksum_verdict(src, dst, algo=args.algo)
+    if args.cmd == "checksum" and args.algo == "crc64":
+        # two clusters + crc64: the reference's own flow — per-region
+        # coprocessor triples, no row ever crosses the wire (the scan+
+        # Spark path below handles files/dumps and the other algos)
+        v = _coprocessor_verdict(args)
+        if v is not None:
             print(json.dumps(v, default=str))
             return 0 if v["equal"] else 1
 
-        if args.cmd == "diff":
-            from pyspark.sql import functions as F
+    src = _keyed(spark, args.src, keys, args)
 
-            from tikv_data_compare_spark.operators.diff import diff, targeted_diff
+    if args.cmd == "checksum":
+        from tikv_data_compare_spark.operators.checksum import checksum_verdict
 
-            dst = _keyed(spark, args.dst, keys, args)
-            tolerances = {}
-            for spec in args.tolerance:
-                col, sep, eps = spec.partition("=")
-                if not sep:
-                    print(f"diff: --tolerance {spec!r} is not COL=EPS[:REL]",
-                          file=sys.stderr)
-                    return 2
-                eps_abs, rel_sep, rel = eps.partition(":")
-                try:
-                    tolerances[col] = (
-                        (float(eps_abs), float(rel)) if rel_sep else float(eps_abs)
-                    )
-                except ValueError:
-                    print(f"diff: --tolerance value {eps!r} is not EPS or EPS:REL",
-                          file=sys.stderr)
-                    return 2
-            if tolerances and args.targeted_buckets > 0:
-                print("diff: --tolerance cannot combine with --targeted-buckets "
-                      "(bucket checksums are exact; sub-eps jitter would flag "
-                      "every bucket)", file=sys.stderr)
+        dst = _keyed(spark, args.dst, keys, args)
+        v = checksum_verdict(src, dst, algo=args.algo)
+        print(json.dumps(v, default=str))
+        return 0 if v["equal"] else 1
+
+    if args.cmd == "diff":
+        from pyspark.sql import functions as F
+
+        from tikv_data_compare_spark.operators.diff import diff, targeted_diff
+
+        dst = _keyed(spark, args.dst, keys, args)
+        tolerances = {}
+        for spec in args.tolerance:
+            col, sep, eps = spec.partition("=")
+            if not sep:
+                print(f"diff: --tolerance {spec!r} is not COL=EPS[:REL]",
+                      file=sys.stderr)
                 return 2
-            if tolerances:
-                from tikv_data_compare_spark.operators.diff import diff_tolerant
-
-                try:
-                    findings = diff_tolerant(src, dst, tolerances)
-                except ValueError as e:
-                    print(f"diff: {e}", file=sys.stderr)
-                    return 2
-            elif args.targeted_buckets > 0:
-                bucket = F.pmod(
-                    F.xxhash64(*[F.col(c) for c in src.keys]),
-                    F.lit(args.targeted_buckets),
+            eps_abs, rel_sep, rel = eps.partition(":")
+            try:
+                tolerances[col] = (
+                    (float(eps_abs), float(rel)) if rel_sep else float(eps_abs)
                 )
-                findings = targeted_diff(src, dst, bucket)
-            else:
-                findings = diff(src, dst)
-            n = 0
-            for row in findings.toLocalIterator():
-                n += 1
-                print(json.dumps(row.asDict(), default=str))
-            print(f"# {n} findings", file=sys.stderr)
-            return 0 if n == 0 else 1
-
-        if args.cmd == "scan":
-            from tikv_data_compare_spark.operators.scan import export_hex
-
-            if args.out_dst and not args.dst:
-                # silently dropping the flag would look like a successful
-                # dual dump that wrote one side (r9 ADVICE)
-                print("scan: --out-dst requires --dst", file=sys.stderr)
+            except ValueError:
+                print(f"diff: --tolerance value {eps!r} is not EPS or EPS:REL",
+                      file=sys.stderr)
                 return 2
-            out = args.out or f"{args.src.rstrip('/')}_scan.log.{int(time.time())}"
-            export_hex(src, path=out)
-            result = {"out": out}
-            if args.dst:
-                # reference dual scan (scan/scan.go:87-108): one invocation
-                # dumps BOTH clusters after the version gate above.  The
-                # reference parallelizes with an errgroup; here each export is
-                # already a fully parallel Spark job over all cores, so the
-                # second dump runs back-to-back rather than contending with
-                # the first for the same executor slots.
-                dst = _keyed(spark, args.dst, keys, args)
-                # '_dst' disambiguates from the src default: same basename
-                # pairs (or a re-run within one second) must not collide
-                # the two dump directories (r9 ADVICE)
-                out_dst = args.out_dst or f"{args.dst.rstrip('/')}_scan_dst.log.{int(time.time())}"
-                export_hex(dst, path=out_dst)
-                result["out_dst"] = out_dst
-            print(json.dumps(result))
-            return 0
+        if tolerances and args.targeted_buckets > 0:
+            print("diff: --tolerance cannot combine with --targeted-buckets "
+                  "(bucket checksums are exact; sub-eps jitter would flag "
+                  "every bucket)", file=sys.stderr)
+            return 2
+        if tolerances:
+            from tikv_data_compare_spark.operators.diff import diff_tolerant
 
-        return 2
-    finally:
-        # end-of-command hygiene: the session may be reused by the embedding
-        # caller — drop any operator-module broadcasts this command created
-        from tikv_data_compare_spark.operators.similarity import release_broadcasts
+            try:
+                findings = diff_tolerant(src, dst, tolerances)
+            except ValueError as e:
+                print(f"diff: {e}", file=sys.stderr)
+                return 2
+        elif args.targeted_buckets > 0:
+            bucket = F.pmod(
+                F.xxhash64(*[F.col(c) for c in src.keys]),
+                F.lit(args.targeted_buckets),
+            )
+            findings = targeted_diff(src, dst, bucket)
+        else:
+            findings = diff(src, dst)
+        n = 0
+        for row in findings.toLocalIterator():
+            n += 1
+            print(json.dumps(row.asDict(), default=str))
+        print(f"# {n} findings", file=sys.stderr)
+        return 0 if n == 0 else 1
 
-        release_broadcasts()
+    if args.cmd == "scan":
+        from tikv_data_compare_spark.operators.scan import export_hex
+
+        if args.out_dst and not args.dst:
+            # silently dropping the flag would look like a successful
+            # dual dump that wrote one side
+            print("scan: --out-dst requires --dst", file=sys.stderr)
+            return 2
+        out = args.out or f"{args.src.rstrip('/')}_scan.log.{int(time.time())}"
+        export_hex(src, path=out)
+        result = {"out": out}
+        if args.dst:
+            # reference dual scan (scan/scan.go:87-108): one invocation
+            # dumps BOTH clusters after the version gate above.  The
+            # reference parallelizes with an errgroup; here each export is
+            # already a fully parallel Spark job over all cores, so the
+            # second dump runs back-to-back rather than contending with
+            # the first for the same executor slots.
+            dst = _keyed(spark, args.dst, keys, args)
+            # '_dst' disambiguates from the src default: same basename
+            # pairs (or a re-run within one second) must not collide
+            # the two dump directories
+            out_dst = args.out_dst or f"{args.dst.rstrip('/')}_scan_dst.log.{int(time.time())}"
+            export_hex(dst, path=out_dst)
+            result["out_dst"] = out_dst
+        print(json.dumps(result))
+        return 0
+
+    return 2
 
 
 if __name__ == "__main__":

@@ -40,7 +40,6 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from tikv_data_compare_spark.operators.similarity import (
     _assign_encode,
     _ivfpq_join_topk,
-    _track,
     _train_pq_from_rows,
     _train_sample_rows,
     resolve_n_probe,
@@ -159,8 +158,8 @@ def build_ann_index(
     sample = _train_sample_rows(src, sample_rows, "embedding")
     cent = _train_centroids_from_rows(sample, n_cells, seed, "embedding")
     books = _train_pq_from_rows(sample, m, k_codes, seed, "embedding")
-    cent_bc = _track(spark.sparkContext.broadcast(cent))
-    books_bc = _track(spark.sparkContext.broadcast(books))
+    cent_bc = spark.sparkContext.broadcast(cent)
+    books_bc = spark.sparkContext.broadcast(books)
     vectors = _assign_encode(src, cent_bc, books_bc)
     vectors.write.mode("overwrite").parquet(f"{path}/vectors")
     spark.createDataFrame(
@@ -343,8 +342,8 @@ def append_to_index(emb_new: DataFrame, path: str, id_col: str = "vec_id",
             import warnings
 
             warnings.warn(msg, UserWarning, stacklevel=2)
-    cent_bc = _track(spark.sparkContext.broadcast(np.asarray(idx.centroids)))
-    books_bc = _track(spark.sparkContext.broadcast(np.asarray(idx.books)))
+    cent_bc = spark.sparkContext.broadcast(np.asarray(idx.centroids))
+    books_bc = spark.sparkContext.broadcast(np.asarray(idx.books))
     # fused assign+encode (r18) — identical (cell, code) per row, one
     # Arrow pass over the appended batch instead of two
     new_vecs = _assign_encode(src, cent_bc, books_bc)
@@ -466,8 +465,8 @@ def topk_index(
             f"query dim {first['d']} != index dim {index.meta['dim']} — an "
             "index built with one geometry cannot be queried with another"
         )
-    cent_bc = _track(spark.sparkContext.broadcast(np.asarray(index.centroids)))
-    books_bc = _track(spark.sparkContext.broadcast(np.asarray(index.books)))
+    cent_bc = spark.sparkContext.broadcast(np.asarray(index.centroids))
+    books_bc = spark.sparkContext.broadcast(np.asarray(index.books))
     qdf = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_emb"))
     emb = (
         emb_for_rerank.select("vec_id", "embedding") if emb_for_rerank is not None else None

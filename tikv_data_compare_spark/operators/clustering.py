@@ -445,7 +445,7 @@ def semantic_dedup(
         # left-to-right accumulation (guide §4.2).  Verdict-exactness is
         # argued in _semdedup_dropped_numpy's docstring and pinned by a
         # full-output parity sweep vs this SQL shape
-        # (tools/probe_semdedup_parity_r19).  threshold_c <= 0 keeps the
+        # (OPTIMIZATION_r19.md §3).  threshold_c <= 0 keeps the
         # SQL join: there Spark drops NaN-cosine pairs (NaN-data vectors,
         # CAST(NaN AS BIGINT) = 0 >= thr) while Arrow's null/NaN conflation
         # can't reproduce that corner bit-for-bit.

@@ -26,24 +26,10 @@ everything else); the composition adds only doc-id anti-joins.
 
 from __future__ import annotations
 
-import time
-
 from pyspark.sql import DataFrame, functions as F
 
 from tikv_data_compare_spark.operators import dedup as dd
 from tikv_data_compare_spark.operators import text as tx
-from tikv_data_compare_spark.operators.similarity import release_broadcasts
-
-#: wall-clock of the two jobs the last ``curate()`` call ran, for stage-level
-#: bench visibility (curation dominates the suite total; a regression inside
-#: one stage must not hide in the aggregate).  ``funnel_flags_agg`` is the
-#: conditional aggregation that also materializes the lazy flags frame (all
-#: gate subplans — dedup groupBy, LSH join, quality, repetition — execute
-#: inside it; the persisted shingle projection is computed once inside this
-#: job — block-manager partition locks already dedupe concurrent branches,
-#: so pre-materializing it in a separate job was measured SLOWER and
-#: reverted); ``kept_materialize`` is the kept-docs semi-join count.
-LAST_STAGE_TIMINGS: dict[str, float] = {}
 
 
 def curate(
@@ -157,11 +143,12 @@ def curate(
     docs whose ``source_col`` is listed drop (NULL source keeps).
 
     Returns ``(kept, attrition)``.  ``kept`` is **persisted** (already
-    materialized); call ``kept.unpersist()`` when done with it.  All other
-    caches and any operator-module broadcasts are released before
-    returning, and on an exception everything, ``kept`` included, is
-    released before it propagates.  Argument errors raise ``ValueError``
-    before any frame is built.
+    materialized); call ``kept.unpersist()`` when done with it.  Every
+    other frame curate persists is released before returning; on an
+    exception everything, ``kept`` included, is released before it
+    propagates.  Broadcasts and checkpoints made by the gates belong to
+    the frames that read them and go with those frames.  Argument errors
+    raise ``ValueError`` before any frame is built.
     """
     spark = docs.sparkSession
 
@@ -498,7 +485,6 @@ def curate(
 
         for f in warm:
             f.result()
-        t0 = time.time()
         # localCheckpoint, not persist: the flags rows are tiny, but their
         # lineage is the whole funnel, and a persisted frame would make every
         # consumer (the kept semi-join, the trim's later_ids, the caller's
@@ -509,7 +495,6 @@ def curate(
             F.count(F.lit(1)).alias("_n0"),
             *[F.sum(F.col(c).cast("long")).alias(f"_n{i + 1}") for i, c in enumerate(stage_cols)],
         ).collect()[0]
-        t_agg = time.time() - t0
         counts = [int(row[f"_n{i}"]) for i in range(len(stage_cols) + 1)]
 
         survivors = flags.filter(F.col(stage_cols[-1])).select(id_col)
@@ -538,9 +523,7 @@ def curate(
             # spans masked (map-side, inside the kept materialization)
             kept = tx.pii_redact(kept, text_col=text_col)
         kept = kept.persist()
-        t0 = time.time()
         kept.count()  # materialize so the caches can be released below
-        t_kept = time.time() - t0
         done = True
     finally:
         # on error, in-flight warm-ups finish before their frames are
@@ -548,13 +531,6 @@ def curate(
         pool.shutdown(wait=True, cancel_futures=True)
         for f in cached if done or kept is None else [*cached, kept]:
             f.unpersist()
-        # drop operator-module broadcasts created along the way, so a
-        # session calling curate() in a loop does not accumulate them
-        release_broadcasts()
-    LAST_STAGE_TIMINGS.clear()
-    LAST_STAGE_TIMINGS.update(
-        {"funnel_flags_agg": round(t_agg, 3), "kept_materialize": round(t_kept, 3)}
-    )
     attrition = spark.createDataFrame(
         [
             (g[0], counts[i], counts[i + 1], counts[i] - counts[i + 1])

@@ -533,16 +533,14 @@ def dsir_weights(
     (the clean/domain data you want more of) than under the raw corpus
     itself.
 
-    **EAGER, unlike every other operator here** (r14 ADVICE): constructing
-    the frame runs TWO collect() jobs (the bounded per-bucket count
-    tables) and freezes the weight literals against the data AS OF CALL
-    TIME — do not build it speculatively, and a source mutated between
-    construction and execution scores with the frozen (stale) costs.  The
-    call also persists an aggregated ``(id, bucket, count)`` frame
-    (MEMORY_AND_DISK); it is exposed as ``out.dsir_cache`` — call
-    ``out.dsir_cache.unpersist()`` (or :func:`release_dsir_cache`) once
-    the returned frame is no longer needed, or repeated calls in a
-    long-lived session accumulate cached frames.
+    **Eager, unlike the lazy operators here**: the call runs two bounded
+    bucket-count collects and the per-doc scoring before it returns, and
+    the returned frame is a local checkpoint of that scoring.  The weights
+    are frozen against the data as of call time (a source mutated later
+    does not change them), so do not build the frame speculatively.  No
+    cache outlives the call; the checkpoint's blocks belong to the
+    returned frame and Spark's ContextCleaner frees them once it is
+    dropped.
 
     Model: bag-of-hashed-n-grams with add-1 smoothing per side —
     ``p(b) = (count_b + 1) / (total + n_buckets)`` — and the frozen
@@ -556,24 +554,19 @@ def dsir_weights(
     tables — bounded, ≤ ``n_buckets`` rows each — and embedded in the
     plan as a literal broadcast table, so the gated metric contains NO
     cross-engine floating point: only md5 bucketing and integer sums run
-    inside either engine, and the oracle embeds the SAME literals.
-    History: r12 froze via the engine ``LN`` (last ulp implementation-
-    defined → flipped across hosts); r13 switched to the det_ln sqrt
-    chain but fed it a smoothing quotient Spark types DECIMAL(34,12)
-    (double-rounding) where DuckDB types it DOUBLE — red again on the
-    driver host while green locally.  Literals end the class: both sides
-    read the one value Python computed.  The doc score is an exact
-    integer sum.  Positive = target-like, negative = raw-typical.
+    inside either engine, and the oracle embeds the SAME literals.  The
+    doc score is an exact integer sum.  Positive = target-like, negative
+    = raw-typical.
 
     Scale shape: the raw corpus's feature explode is pre-aggregated to
-    ``(id, bucket, count)`` once and PERSISTED (MEMORY_AND_DISK; far
-    smaller than the text — ≤ min(n_features, n_buckets) integer rows
-    per doc), so the explode+md5 map stage — the operator's dominant
-    cost — runs exactly once: the bucket-count collect materializes the
-    cache and the per-doc scoring re-reads it.  The weight table is a
-    driver-built ``n_buckets``-row literal and broadcasts; the per-doc
-    score is one count-weighted integer sum.  The raw corpus text itself
-    never shuffles — only the bounded (id, bucket, count) frame does.
+    ``(id, bucket, count)`` and persisted for the duration of the call
+    (MEMORY_AND_DISK; ≤ min(n_features, n_buckets) integer rows per doc),
+    so the explode+md5 map stage — the operator's dominant cost — runs
+    exactly once: the bucket-count collect materializes the cache and the
+    scoring re-reads it.  The weight table is a driver-built
+    ``n_buckets``-row literal and broadcasts; the per-doc score is one
+    count-weighted integer sum.  The raw corpus text itself never
+    shuffles — only the bounded (id, bucket, count) frame does.
     Docs with zero features (NULL/empty text) get ``dsir_n_feats = 0``
     and a NULL score ("can't evaluate", the ngram_lm_score convention).
     Rows whose ``id_col`` is NULL are excluded from the raw corpus model
@@ -586,9 +579,9 @@ def dsir_weights(
     Returns ``(id, dsir_n_feats, dsir_logw_c)``; the ``dsir_logw_c``
     column carries the build parameters (n_buckets / algo / text_col) as
     column METADATA so :func:`dsir_sample`'s ``weights=`` seam can verify
-    the frame was built with matching arguments (r14 ADVICE — a frame
-    built with a different geometry would otherwise silently select a
-    different kept set).
+    the frame was built with matching arguments (a frame built with a
+    different geometry would otherwise silently select a different kept
+    set).
     """
     from tikv_data_compare_spark.operators.dedup import _check_algo
 
@@ -607,126 +600,93 @@ def dsir_weights(
         target, None, target_text_col or text_col, n_buckets, algo=algo
     )
     raw = _dsir_feats(df, id_col, text_col, n_buckets, algo=algo)
-    # Pre-aggregate the raw occurrences to (id, bucket, count) ONCE and
-    # persist: the bucket-count collect below materializes the cache, the
-    # per-doc scoring re-reads it, so the explode+md5+hexfold map stage —
-    # the operator's dominant cost — runs exactly once.  The cached frame
-    # is the AGGREGATED one (≤ min(n_features, n_buckets) integer rows per
-    # doc, far smaller than the occurrence stream or the text) and
-    # MEMORY_AND_DISK spills at corpus scale.
+    # Pre-aggregate the raw occurrences to (id, bucket, count) once and
+    # persist it for the call: the bucket-count collect below materializes
+    # the cache and the per-doc scoring re-reads it, so the explode+md5+
+    # hexfold map stage runs exactly once.  The cached frame is the
+    # aggregated one (far smaller than the occurrence stream or the text)
+    # and MEMORY_AND_DISK spills at corpus scale.  The scoring output is
+    # checkpointed before the cache is released, not this frame: under AQE
+    # even a lazy localCheckpoint runs the shuffle map stage at call time,
+    # outside the two-collect overlap below.
     from pyspark.storagelevel import StorageLevel
 
     rc = raw.groupBy(id_col, "_b").agg(
         F.count(F.lit(1)).cast("long").alias("_dsir_ct")
     ).persist(StorageLevel.MEMORY_AND_DISK)
-    # The per-bucket smoothed log costs are frozen ON THE DRIVER from the
-    # two bounded (≤ n_buckets-row) collected count tables and embedded as
-    # a literal table: no ln, no division — no floating point at all —
-    # executes inside Spark or the oracle, so the gate cannot drift on
-    # engine float semantics again (r12: engine-LN ulp; r13: Spark typing
-    # the quotient DECIMAL(34,12) vs DuckDB's DOUBLE — both engines fed
-    # det_ln different binary64s).  Python's int-division-to-float and
-    # math.log define each value once, shared verbatim by both sides.
-    # the raw-side and target-side bucket-count collects are independent —
-    # overlap them (guide §2.6); results unchanged, wall shrinks by the
-    # smaller job
-    from concurrent.futures import ThreadPoolExecutor
+    try:
+        # The per-bucket smoothed log costs are frozen on the driver from
+        # the two bounded (≤ n_buckets-row) collected count tables and
+        # embedded as a literal table: no ln, no division — no floating
+        # point at all — executes inside Spark or the oracle, so the gate
+        # cannot drift on engine float semantics.  Python's
+        # int-division-to-float and math.log define each value once, shared
+        # verbatim by both sides.  The raw-side and target-side collects are
+        # independent, so they overlap.
+        from concurrent.futures import ThreadPoolExecutor
 
-    with ThreadPoolExecutor(max_workers=2) as _pool:
-        _f_cr = _pool.submit(
-            lambda: {
-                int(r["_b"]): int(r["_c"])
-                for r in rc.groupBy("_b")
-                .agg(F.sum("_dsir_ct").cast("long").alias("_c"))
-                .collect()
-            }
-        )
-        _f_ct = _pool.submit(
-            lambda: {
-                int(r["_b"]): int(r["_c"])
-                for r in tgt.groupBy("_b")
-                .agg(F.count(F.lit(1)).cast("long").alias("_c"))
-                .collect()
-            }
-        )
-        cr_counts, ct_counts = _f_cr.result(), _f_ct.result()
-    tr, tt = sum(cr_counts.values()), sum(ct_counts.values())
-    wtab = df.sparkSession.createDataFrame(
-        [
-            (
-                b,
-                sqlgen.frozen_ln_c_py((tr + n_buckets) / (cr_counts.get(b, 0) + 1))
-                - sqlgen.frozen_ln_c_py((tt + n_buckets) / (ct_counts.get(b, 0) + 1)),
+        with ThreadPoolExecutor(max_workers=2) as _pool:
+            _f_cr = _pool.submit(
+                lambda: {
+                    int(r["_b"]): int(r["_c"])
+                    for r in rc.groupBy("_b")
+                    .agg(F.sum("_dsir_ct").cast("long").alias("_c"))
+                    .collect()
+                }
             )
-            for b in range(n_buckets)
-        ],
-        "_b long, _w_c long",
-    )
-    # LEFT join although the dense literal domain makes every key match: an
-    # INNER join lets Catalyst infer `isnotnull(_b)` on the stream side and
-    # push it BELOW the md5-staging Project, re-inlining the hexfold into
-    # the filter — md5 recomputed once per hex digit per n-gram (measured
-    # 2× wall on the whole operator)
-    scored = rc.join(F.broadcast(wtab), "_b", "left")
-    per_doc = scored.groupBy(id_col).agg(
-        F.sum("_dsir_ct").cast("long").alias("dsir_n_feats"),
-        F.sum(F.col("_dsir_ct") * F.col("_w_c")).cast("long").alias("dsir_logw_c"),
-    )
-    out = df.select(id_col).join(per_doc, id_col, "left").select(
-        id_col,
-        F.coalesce("dsir_n_feats", F.lit(0).cast("long")).alias("dsir_n_feats"),
-        F.col("dsir_logw_c").alias(
-            "dsir_logw_c",
-            metadata={
-                "dsir_n_buckets": n_buckets,
-                "dsir_algo": algo,
-                "dsir_text_col": text_col,
-            },
-        ),
-    )
-    # the persisted feature frame's release handle (see docstring ¶2).
-    # The attribute is an ad-hoc Python attribute: it survives ONLY on the
-    # exact returned object — any further transformation (select/filter/
-    # union) returns a new DataFrame without it (r15 ADVICE).  The
-    # module-level registry below is the attribute-survival-independent
-    # fallback: release_all_dsir_caches() frees every live handle even
-    # when callers composed the frame away.
-    out.dsir_cache = rc
-    _DSIR_CACHES.append(rc)
-    return out
-
-
-#: live (id, bucket, count) cache handles from dsir_weights calls this
-#: session, in creation order — see release_all_dsir_caches()
-_DSIR_CACHES: list[DataFrame] = []
-
-
-def release_dsir_cache(weights: DataFrame) -> None:
-    """Unpersist the ``(id, bucket, count)`` frame a :func:`dsir_weights`
-    call cached (no-op for frames without the handle — e.g. one read back
-    from parquet, which never carried a cache, or any frame derived by
-    further transformation, which loses the Python attribute; for those,
-    use :func:`release_all_dsir_caches`)."""
-    cache = getattr(weights, "dsir_cache", None)
-    if cache is not None:
-        cache.unpersist()
-        try:
-            _DSIR_CACHES.remove(cache)
-        except ValueError:
-            pass
-
-
-def release_all_dsir_caches() -> int:
-    """Unpersist EVERY live dsir_weights feature cache created this
-    session and return how many were released — the long-lived-session
-    escape hatch for callers that composed on the returned frame and lost
-    its ``.dsir_cache`` attribute (r15 ADVICE).  Safe to call anytime:
-    the caches are pure performance state (recomputed on demand)."""
-    n = len(_DSIR_CACHES)
-    for rc in _DSIR_CACHES:
+            _f_ct = _pool.submit(
+                lambda: {
+                    int(r["_b"]): int(r["_c"])
+                    for r in tgt.groupBy("_b")
+                    .agg(F.count(F.lit(1)).cast("long").alias("_c"))
+                    .collect()
+                }
+            )
+            cr_counts, ct_counts = _f_cr.result(), _f_ct.result()
+        tr, tt = sum(cr_counts.values()), sum(ct_counts.values())
+        wtab = df.sparkSession.createDataFrame(
+            [
+                (
+                    b,
+                    sqlgen.frozen_ln_c_py(
+                        (tr + n_buckets) / (cr_counts.get(b, 0) + 1)
+                    )
+                    - sqlgen.frozen_ln_c_py(
+                        (tt + n_buckets) / (ct_counts.get(b, 0) + 1)
+                    ),
+                )
+                for b in range(n_buckets)
+            ],
+            "_b long, _w_c long",
+        )
+        # LEFT join although the dense literal domain makes every key
+        # match: an INNER join lets Catalyst infer `isnotnull(_b)` on the
+        # stream side and push it below the md5-staging Project,
+        # re-inlining the hexfold into the filter — md5 recomputed once per
+        # hex digit per n-gram (measured 2× wall on the whole operator)
+        scored = rc.join(F.broadcast(wtab), "_b", "left")
+        per_doc = scored.groupBy(id_col).agg(
+            F.sum("_dsir_ct").cast("long").alias("dsir_n_feats"),
+            F.sum(F.col("_dsir_ct") * F.col("_w_c"))
+            .cast("long")
+            .alias("dsir_logw_c"),
+        )
+        out = df.select(id_col).join(per_doc, id_col, "left").select(
+            id_col,
+            F.coalesce("dsir_n_feats", F.lit(0).cast("long"))
+            .alias("dsir_n_feats"),
+            F.col("dsir_logw_c").alias(
+                "dsir_logw_c",
+                metadata={
+                    "dsir_n_buckets": n_buckets,
+                    "dsir_algo": algo,
+                    "dsir_text_col": text_col,
+                },
+            ),
+        )
+        return out.localCheckpoint(eager=True)
+    finally:
         rc.unpersist()
-    _DSIR_CACHES.clear()
-    return n
 
 
 def dsir_sample(
@@ -775,21 +735,16 @@ def dsir_sample(
     the feature explode + bucket-count collects a second time — it must
     be the dsir_weights output for the same ``(df, target, id_col,
     n_buckets, algo)``; ``target`` is then unused and may be None.  The
-    match IS verified (r15) against the build-parameter metadata
+    match IS verified against the build-parameter metadata
     dsir_weights stamps on ``dsir_logw_c`` — a mismatched n_buckets /
     algo / text_col raises instead of silently selecting a different
     kept set.  Parquet round-trips preserve column metadata, so a
-    persisted-and-reloaded dsir_weights frame is verified too (r15
-    ADVICE correction); only user-BUILT frames lacking the stamp are
-    accepted unverified.
+    persisted-and-reloaded dsir_weights frame is verified too; only
+    user-BUILT frames lacking the stamp are accepted unverified.
 
-    Each dsir_weights call persists its aggregated (id, bucket, count)
-    frame (MEMORY_AND_DISK) so its own count-collect and scoring passes
-    share one feature explode; the handle rides along as
-    ``.dsir_cache`` on the frame this function returns — unpersist it
-    (or :func:`release_dsir_cache`) when done, or
-    ``spark.catalog.clearCache()`` between unrelated runs (the
-    bench/oracle harnesses already do).
+    With ``weights=None`` the call runs :func:`dsir_weights` eagerly (its
+    jobs run here, not at the first action on the result); the returned
+    frame is lazy and leaves nothing cached behind.
     """
     if weights is None:
         if target is None:
@@ -809,12 +764,10 @@ def dsir_sample(
     else:
         # dsir_weights stamps its build parameters on the column metadata;
         # a frame built with a different geometry/hash/text column would
-        # pass the shape check yet silently select a DIFFERENT kept set
-        # (r14 ADVICE).  Parquet round-trips PRESERVE column metadata, so
-        # a persisted-and-reloaded dsir_weights output is still verified
-        # here (r15 ADVICE correction); only user-BUILT frames without the
-        # stamp are accepted as-is — the mismatch is undetectable there
-        # and the docstring says so.
+        # pass the shape check yet silently select a DIFFERENT kept set.
+        # Parquet round-trips and localCheckpoint preserve column metadata;
+        # only user-BUILT frames without the stamp are accepted as-is — the
+        # mismatch is undetectable there and the docstring says so.
         meta = weights.schema["dsir_logw_c"].metadata or {}
         expected = {
             "dsir_n_buckets": n_buckets,
@@ -859,7 +812,7 @@ def dsir_sample(
     # projection — which pushed the whole-stage-codegen method past the
     # JVM's 64 KB limit (interpreted fallback) next to the 30x hexfold.
     # The 10000-value table is a pure constant — memoized at module level
-    # (r18) so repeated dsir_sample calls skip the 10k-log rebuild.
+    # so repeated dsir_sample calls skip the 10k-log rebuild.
     coins = df.sparkSession.createDataFrame(
         _coin_rows(), "_u_bk long, _u_c long"
     ).withColumnRenamed("_u_c", u_col)
@@ -868,16 +821,10 @@ def dsir_sample(
         .join(F.broadcast(coins), "_u_bk")
         .drop(_STAGE, "_u_bk")
     )
-    out = (
+    return (
         staged.join(w.select(id_col, F.col("dsir_logw_c").alias(logw_col)), id_col)
         .where(F.col(u_col) + F.col(logw_col) >= F.lit(int(tau_c)))
     )
-    # surface the weights frame's cache handle (present iff this call — or
-    # the caller's dsir_weights — built it) so one-shot users can release
-    cache = getattr(weights, "dsir_cache", None)
-    if cache is not None:
-        out.dsir_cache = cache
-    return out
 
 
 #: memoized 10000-row rejection-coin table (pure constants — a function of
@@ -1211,12 +1158,12 @@ def quality_classifier(
     n_buckets: int = 2048,
     algo: str = "md5i64",
 ) -> DataFrame:
-    """fastText-style model-based document quality scorer (r16, VERDICT
-    r15 task 5): "looks like the reference corpus vs looks like crawl" —
-    the learned quality dimension that sits beside DSIR in published
-    curation stacks (GPT-3 WebText-vs-CommonCrawl filter, LLaMA's
-    Wikipedia-reference classifier), trained and frozen entirely from
-    bounded driver-side state.
+    """fastText-style model-based document quality scorer: "looks like
+    the reference corpus vs looks like crawl" — the learned quality
+    dimension that sits beside DSIR in published curation stacks (GPT-3
+    WebText-vs-CommonCrawl filter, LLaMA's Wikipedia-reference
+    classifier), trained and frozen entirely from bounded driver-side
+    state.
 
     Model = hashed unigram+bigram features (``_dsir_feats``, the DSIR
     representation), per-bucket Naive-Bayes log-odds weights from the two
@@ -1237,9 +1184,14 @@ def quality_classifier(
     no ids (features aggregate per synthetic row id for the histogram;
     the histogram is invariant to id values).
 
-    EAGER like :func:`dsir_weights` (three bounded collects: two
-    ≤ ``n_buckets``-row count tables + the score histogram) and frozen
-    against the data as of call time.
+    Eager like :func:`dsir_weights`: training runs three bounded collects
+    (two ≤ ``n_buckets``-row count tables and the score histogram) and
+    freezes the model against the data as of call time.  With
+    ``crawl=None`` the per-doc scoring runs in the call too and the
+    returned frame is a local checkpoint of it, owned by the frame (Spark's
+    ContextCleaner frees its blocks once it is dropped); with an explicit
+    ``crawl`` the scoring stays lazy.  Either way no cache outlives the
+    call, also when training raises.
 
     Scale shape: the corpus feature explode is map-side; scoring is one
     ``(id, bucket, count)`` aggregation joined with the broadcast
@@ -1259,8 +1211,8 @@ def quality_classifier(
     ``q_sum_c`` (``qc_thr_c`` / ``qc_n_buckets`` / ``qc_algo`` /
     ``qc_text_col``).
     """
-    # Explicit-crawl calls delegate to the fit/score seam below (r16 —
-    # quality_model trains and stamps the weight frame, score applies it).
+    # Explicit-crawl calls delegate to the fit/score seam below
+    # (quality_model trains and stamps the weight frame, score applies it).
     if crawl is not None:
         model = quality_model(
             docs, seed, crawl=crawl, text_col=text_col,
@@ -1270,18 +1222,13 @@ def quality_classifier(
         return quality_score_with_model(docs, model, id_col=id_col, text_col=text_col)
 
     # crawl=None — the GPT-3 default where the corpus IS the negative
-    # class (the driver-gate and bench geometry).  r18: ONE corpus feature
-    # explode serves the crawl count table, the calibration histogram AND
-    # the scoring pass — the delegation path explodes+hashes the corpus
-    # twice (once into quality_model's crawl rc, once lazily at score
-    # time).  Features are keyed by a synthetic row id exactly like
-    # quality_model's crawl class (so NULL-``id_col`` rows still count as
-    # crawl mass and duplicate ids contribute per ROW — behavior
-    # unchanged, pinned by the model≡one-call parquet test) with the real
-    # id carried alongside for the per-doc score aggregation.  The
-    # persisted rc is released via the same cache registry as
-    # dsir_weights (``_DSIR_CACHES`` / release_all_dsir_caches) — eager
-    # training materializes it, lazy scoring re-reads it.
+    # class.  One corpus feature explode serves the crawl count table, the
+    # calibration histogram and the scoring pass (the delegation path would
+    # explode and hash the corpus twice).  Features are keyed by a
+    # synthetic row id exactly like quality_model's crawl class (so
+    # NULL-``id_col`` rows still count as crawl mass and duplicate ids
+    # contribute per row), with the real id carried alongside for the
+    # per-doc score aggregation.
     from tikv_data_compare_spark.operators.dedup import _check_algo
 
     _check_algo(algo)
@@ -1307,41 +1254,33 @@ def quality_classifier(
     c_rc = c_feats.groupBy("_qid", "_doc", "_b").agg(
         F.count(F.lit(1)).cast("long").alias("_ct")
     ).persist(StorageLevel.MEMORY_AND_DISK)
-    # register the scoring cache BEFORE training (r19, ADVICE r18): if
-    # _qc_train raises, the finally below frees s_rc but c_rc would
-    # otherwise stay persisted with no handle anywhere —
-    # release_all_dsir_caches() could never find it
-    _DSIR_CACHES.append(c_rc)
     try:
         wtab, thr_c = _qc_train(docs.sparkSession, s_rc, c_rc, n_buckets)
+        meta = {
+            "qc_thr_c": thr_c,
+            "qc_n_buckets": n_buckets,
+            "qc_algo": algo,
+            "qc_text_col": text_col,
+        }
+        per_doc = (
+            c_rc.join(F.broadcast(wtab), "_b", "left")
+            .groupBy("_doc")
+            .agg(
+                F.sum("_ct").cast("long").alias("q_n_feats"),
+                F.sum(F.col("_ct") * F.col("_w_c")).cast("long").alias("q_sum_c"),
+            )
+            .withColumnRenamed("_doc", id_col)
+        )
+        out = docs.select(id_col).join(per_doc, id_col, "left").select(
+            id_col,
+            F.coalesce("q_n_feats", F.lit(0).cast("long")).alias("q_n_feats"),
+            F.col("q_sum_c").alias("q_sum_c", metadata=meta),
+            (F.col("q_sum_c") >= F.lit(thr_c) * F.col("q_n_feats")).alias("q_keep"),
+        )
+        return out.localCheckpoint(eager=True)
     finally:
         s_rc.unpersist()
-    meta = {
-        "qc_thr_c": thr_c,
-        "qc_n_buckets": n_buckets,
-        "qc_algo": algo,
-        "qc_text_col": text_col,
-    }
-    per_doc = (
-        c_rc.join(F.broadcast(wtab), "_b", "left")
-        .groupBy("_doc")
-        .agg(
-            F.sum("_ct").cast("long").alias("q_n_feats"),
-            F.sum(F.col("_ct") * F.col("_w_c")).cast("long").alias("q_sum_c"),
-        )
-        .withColumnRenamed("_doc", id_col)
-    )
-    out = docs.select(id_col).join(per_doc, id_col, "left").select(
-        id_col,
-        F.coalesce("q_n_feats", F.lit(0).cast("long")).alias("q_n_feats"),
-        F.col("q_sum_c").alias("q_sum_c", metadata=meta),
-        (F.col("q_sum_c") >= F.lit(thr_c) * F.col("q_n_feats")).alias("q_keep"),
-    )
-    # the scoring pass re-reads the persisted rc — expose the release
-    # handle exactly like dsir_weights' cache (docstring there); already
-    # registered in _DSIR_CACHES above, pre-training
-    out.dsir_cache = c_rc
-    return out
+        c_rc.unpersist()
 
 
 def quality_model(
@@ -1418,8 +1357,8 @@ def quality_model(
 
 def _qc_train(spark, s_rc: DataFrame, c_rc: DataFrame, n_buckets: int):
     """The classifier's driver-side trainer over two prepared per-row
-    bucket-count frames ``(_qid, _b, _ct)`` (extracted r18 — one source of
-    truth shared by :func:`quality_model` and the shared-explode path in
+    bucket-count frames ``(_qid, _b, _ct)`` (one source of truth shared
+    by :func:`quality_model` and the shared-explode path in
     :func:`quality_classifier`): collect the two bounded per-bucket count
     tables, freeze the NB weight table, bin the per-row mean log-odds
     histogram, Newton-fit the logistic head.  Returns ``(wtab, thr_c)``."""

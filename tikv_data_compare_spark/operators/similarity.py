@@ -18,34 +18,6 @@ from pyspark.sql import DataFrame, Window, functions as F, types as T
 
 from tikv_data_compare_spark.functions import sqlgen
 
-#: handles to every broadcast this module created, so long-lived sessions
-#: (notebooks, services) can reclaim executor memory between workloads with
-#: :func:`release_broadcasts` — otherwise blocks live until Spark's
-#: ContextCleaner notices the (closure-held) handle is unreachable
-_LIVE_BROADCASTS: list = []
-
-
-def _track(bc):
-    _LIVE_BROADCASTS.append(bc)
-    return bc
-
-
-def release_broadcasts() -> int:
-    """Unpersist every broadcast created by this module's operators (plane
-    matrices, query matrices, IVF centroids) and drop the handles.  Safe to
-    call while returned DataFrames are still alive: ``unpersist()`` keeps
-    the driver copy, so a later action simply re-ships the blocks.
-    Returns the number released."""
-    n = 0
-    for bc in _LIVE_BROADCASTS:
-        try:
-            bc.unpersist()
-            n += 1
-        except Exception:  # noqa: BLE001 — a stopped context is fine
-            pass
-    _LIVE_BROADCASTS.clear()
-    return n
-
 #: ceiling on driver-collected query sets: the top-k operators broadcast the
 #: query matrix (n_queries · dim doubles) after a driver collect — by design
 #: (the CORPUS never shuffles; queries are the small side).  16k queries at
@@ -124,7 +96,7 @@ def topk_bruteforce(emb: DataFrame, k: int = 5, n_queries: int = 10) -> DataFram
     qids = [int(r["vec_id"]) for r in qrows]
     qmat = np.array([list(r["embedding"]) for r in qrows], dtype=np.float64)
     qnorm = qmat / np.linalg.norm(qmat, axis=1, keepdims=True)
-    bc = _track(spark.sparkContext.broadcast((qids, qnorm)))
+    bc = spark.sparkContext.broadcast((qids, qnorm))
 
     def score_batches(batches):
         import numpy as np
@@ -253,7 +225,7 @@ def lsh_buckets(
     if dim is None:
         first = emb.select(vec_col).first()
         dim = len(first[vec_col]) if first else 1
-    bc = _track(spark.sparkContext.broadcast(_plane_matrix(dim, n_planes, n_tables, seed)))
+    bc = spark.sparkContext.broadcast(_plane_matrix(dim, n_planes, n_tables, seed))
     out_schema = T.StructType(list(emb.schema.fields) + [T.StructField("bucket", T.LongType())])
 
     def bucketize(batches):
@@ -509,7 +481,7 @@ def topk_ivf(
     spark = emb.sparkSession
     n_probe = resolve_n_probe(n_probe, emb.count() if n_probe == "auto" else 0, n_cells, k=k)
     cent = _train_centroids(emb, n_cells, sample_rows, seed, "embedding")
-    bc = _track(spark.sparkContext.broadcast(cent))
+    bc = spark.sparkContext.broadcast(cent)
     corpus = _assign_cells(emb.select("vec_id", "embedding"), bc, "embedding")
 
     qrows = _collect_queries(emb, n_queries)
@@ -613,7 +585,7 @@ def topk_ivf_join(
     spark = emb.sparkSession
     n_probe = resolve_n_probe(n_probe, emb.count() if n_probe == "auto" else 0, n_cells, k=k)
     cent = _train_centroids(emb, n_cells, sample_rows, seed, "embedding")
-    bc = _track(spark.sparkContext.broadcast(cent))
+    bc = spark.sparkContext.broadcast(cent)
     corpus = _assign_cells(emb.select("vec_id", "embedding"), bc, "embedding")
     q = _probe_cells(
         queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_emb")),
@@ -685,9 +657,9 @@ def topk_ivfpq_join(
     # no-broadcast-ceiling query side, pinned in test_plans)
     sample = _train_sample_rows(emb, sample_rows, "embedding")
     cent = _train_centroids_from_rows(sample, n_cells, seed, "embedding")
-    cent_bc = _track(spark.sparkContext.broadcast(cent))
+    cent_bc = spark.sparkContext.broadcast(cent)
     books = _train_pq_from_rows(sample, m, k_codes, seed, "embedding")
-    books_bc = _track(spark.sparkContext.broadcast(books))
+    books_bc = spark.sparkContext.broadcast(books)
     corpus = _assign_encode(emb.select("vec_id", "embedding"), cent_bc, books_bc)
 
     qdf = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_emb"))
@@ -1111,7 +1083,7 @@ def topk_pq(
     # per-batch top emit is a deterministic superset of the global
     # top-``keep`` by (score desc, id asc), so the window output is
     # byte-identical at any Arrow batch layout.
-    lut_bc = _track(spark.sparkContext.broadcast((qids, luts, books)))
+    lut_bc = spark.sparkContext.broadcast((qids, luts, books))
 
     def encode_score_batches(batches):
         import numpy as np
@@ -1275,7 +1247,7 @@ def topk_ivfpq(
     # top-``keep``, so the window output is byte-identical at any Arrow
     # batch layout.  The trainers share one sample collect too (two
     # identical TakeOrdered jobs before).
-    fused_bc = _track(spark.sparkContext.broadcast((qids, luts, books, cent, cells)))
+    fused_bc = spark.sparkContext.broadcast((qids, luts, books, cent, cells))
 
     def fused_scan(batches):
         import numpy as np

@@ -19,26 +19,6 @@ from tikv_data_compare_spark.operators import text as tx
 from tikv_data_compare_spark.queries import MINHASH_P, MINHASH_PERMS, STOPWORDS, _load
 from tikv_data_compare_spark.session import tune
 
-#: live persisted frames created by query functions in this module, in
-#: creation order — the attribute-survival-independent release registry
-#: (r17, ADVICE; the sampling._DSIR_CACHES pattern).  Ad-hoc handles like
-#: ``out.fps_cache`` are lost on ANY further DataFrame transformation, so
-#: a long-lived session calling a query row repeatedly would otherwise
-#: accumulate persisted frames with no way to free them.
-_QUERY_CACHES: list[DataFrame] = []
-
-
-def release_all_query_caches() -> int:
-    """Unpersist EVERY live cache a query function in this module created
-    this session and return how many were released.  Safe to call anytime:
-    the caches are pure performance state (recomputed on demand)."""
-    n = len(_QUERY_CACHES)
-    for rc in _QUERY_CACHES:
-        rc.unpersist()
-    _QUERY_CACHES.clear()
-    return n
-
-
 # ========================================================== dedup: exact
 
 
@@ -1391,15 +1371,14 @@ def q_text_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     # verified on this exact corpus at sf0.01/sf0.001; operator docstring
     # for the completeness proof), while the decontam part below stays
     # uncapped so the pure winnow path remains gated too.
-    # r16: ONE persisted span-24 winnow pass feeds all three w=20
-    # consumers through the doc_fps seam (self-dedup, exact decontam, the
-    # bloom probe) — this row previously winnowed the corpus three times
-    # (Spark does not dedupe unpersisted subplans), and the rekey mode
-    # adds two more consumers of the same frame (hot-df agg, affected-id
-    # semi).  The cache rides as ``.fps_cache`` on the returned frame
-    # (the dsir_cache convention); harness sessions clearCache() anyway.
-    d_fp20_all = tx.winnow_fingerprints(docs, "doc_id", "text", k=5, w=20).persist()
-    _QUERY_CACHES.append(d_fp20_all)
+    # ONE span-24 winnow pass feeds all three w=20 consumers through the
+    # doc_fps seam (self-dedup, exact decontam, the bloom probe) and the
+    # rekey mode's two extra readers (hot-df agg, affected-id semi); Spark
+    # does not dedupe unpersisted subplans.  A local checkpoint, not a
+    # persist: its blocks belong to the returned frame and go with it.
+    d_fp20_all = tx.winnow_fingerprints(
+        docs, "doc_id", "text", k=5, w=20
+    ).localCheckpoint()
     # r18: the operators' algo default flipped to xxhash64 (throughput);
     # this GATE row pins md5i64 explicitly — the oracle replays the md5
     # winnow bit-for-bit, and the shared d_fp20_all frame is md5-stamped
@@ -1483,7 +1462,7 @@ def q_text_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("max_jaccard_c").alias("fz_maxj"),
         F.col("contaminated").cast("long").alias("fz_flag"),
     )
-    out = (
+    return (
         fp.join(wn, "doc_id")
         .join(conta, "doc_id")
         .join(wd, "doc_id")
@@ -1493,11 +1472,6 @@ def q_text_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("bl_hits", F.coalesce("bl_hits", F.lit(0).cast("long")))
         .join(fz, "doc_id")
     )
-    # release handle for the shared winnow cache (dsir_cache convention);
-    # the attribute survives only on THIS object — the module registry
-    # above (release_all_query_caches) is the durable release path (r17)
-    out.fps_cache = d_fp20_all
-    return out
 
 
 def _winnow_sel_sql(src: str, idc: str, w: int) -> str:
@@ -2247,10 +2221,9 @@ def _sampling_parts(spark: SparkSession, sf_dir: str) -> dict:
         (F.col("rate_bp") * 100000 + F.col("mix_bucket")).cast("long").alias("metric"),
     )
     target = docs.filter(F.col("lang") == "en")
-    # ONE dsir_weights build shared by both DSIR parts (r14): the weights
-    # frame — and with it the persisted feature aggregate and the two
-    # bounded count collects — is computed once; dsir_sample reuses it via
-    # its weights= seam instead of re-running the explode
+    # ONE dsir_weights build shared by both DSIR parts: the feature
+    # explode and the two bounded count collects run once; dsir_sample
+    # reuses the weights through its weights= seam
     w = dsir_weights(docs, target, n_buckets=512)
     ds = w.join(docs.select("doc_id", "lang"), "doc_id").select(
         F.lit("dsir").alias("method"), "doc_id", "lang",
@@ -2282,10 +2255,6 @@ def _sampling_parts(spark: SparkSession, sf_dir: str) -> dict:
         "hash": h, "stratified": s, "shard": sh, "mixture": mx,
         "token_mixture": tm, "dsir": ds, "dsir_kept": dk,
         "token_budget": tb, "split": sa,
-        # the dsir_weights cache handle (r15, ADVICE): one-shot harnesses
-        # that materialize a composed row should release it afterwards —
-        # sampling.release_dsir_cache(parts["_dsir_cache_holder"])
-        "_dsir_cache_holder": w,
     }
 
 
@@ -2294,9 +2263,7 @@ def q_sampling_dsir(spark: SparkSession, sf_dir: str) -> DataFrame:
     resampling rule) — the r12-new machinery whose frozen-log freeze was
     the leading drift suspect; a dedicated driver row pins it."""
     p = _sampling_parts(spark, sf_dir)
-    out = p["dsir"].unionByName(p["dsir_kept"])
-    out.dsir_cache = p["_dsir_cache_holder"].dsir_cache
-    return out
+    return p["dsir"].unionByName(p["dsir_kept"])
 
 
 def q_sampling_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2366,7 +2333,6 @@ def q_sampling(spark: SparkSession, sf_dir: str) -> DataFrame:
         "dsir", "dsir_kept", "token_budget", "split",
     ):
         out = out.unionByName(p[key])
-    out.dsir_cache = p["_dsir_cache_holder"].dsir_cache
     return out
 
 
@@ -2838,8 +2804,7 @@ def q_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     # self-join dominates the row (~9x at sf0.01, same degeneracy the
     # text_fingerprints row caps).  200 is the measured sweet spot at
     # both driver scales (sf0.01: 3.74->2.82 s, sf0.1: 9.16->7.61 s vs
-    # 50; 1000 degrades sf0.01 to 7.1 s —
-    # tools/probe_trim_cap_r18_runs.jsonl):
+    # 50; 1000 degrades sf0.01 to 7.1 s; BASELINE.md, cap-200 tuning):
     # the knob trades winnow-candidate fan-out against gram fan-out and
     # the output is identical at every value
     kept, attrition = curate(

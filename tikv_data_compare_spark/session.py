@@ -4,6 +4,22 @@ Local testing runs ``local[N]`` in one JVM; the configs below are chosen so
 the same logical plans scale to a real cluster (AQE on, shuffle partitions
 sized to cores locally — on a 1000-executor cluster these come from the
 cluster conf instead).
+
+Resource lifetime.  Many callers may share one session, so no operator
+keeps Spark state in a module-level list, and no operator frees anything
+it did not create.  Every cache, checkpoint or broadcast an operator makes
+follows one of two rules:
+
+- **Call-local**: ``persist()`` inside ``try``, ``unpersist()`` (or
+  ``destroy()``) in ``finally``, so nothing outlives the call, also when
+  it raises.
+- **Owned by the returned frame**: state the lazy result still needs is
+  either materialized into it with ``localCheckpoint(eager=True)`` or held
+  by the closure of one of its UDFs (a ``sc.broadcast``).  Spark's
+  ContextCleaner frees those blocks once the frame is unreachable.
+
+The one documented exception is a frame returned persisted as the
+caller's handle (``curate``'s ``kept``); the caller unpersists it.
 """
 
 from __future__ import annotations
