@@ -1054,8 +1054,6 @@ def test_cli_chunk(capsys, spark, tmp_path):
 
 
 def test_cli_imagehash(capsys, spark, tmp_path):
-    import sys as _sys
-    _sys.path.insert(0, "/root/repo/tests")
     from test_multimodal import _gradient_png
 
     base = _gradient_png(32, 32)
@@ -1115,8 +1113,6 @@ def test_cli_ingest_and_imagehash_flag_guards(capsys, spark, tmp_path):
 def test_cli_imagehash_index_roundtrip(capsys, spark, tmp_path):
     """build-index → append-index → index query through the CLI: the
     persisted-band path finds the same near-dup the batch self-join does."""
-    import sys as _sys
-    _sys.path.insert(0, "/root/repo/tests")
     from test_multimodal import _gradient_png
 
     base = _gradient_png(32, 32)

@@ -160,8 +160,6 @@ def _png_rows(spark, ids_and_payloads):
 def test_dhash_index_stream_chunked_equals_oneshot(spark, tmp_path):
     """Index maintained epoch-by-epoch from an image stream finds the same
     cross pairs as an index built one-shot from the union."""
-    import sys as _sys
-    _sys.path.insert(0, "/root/repo/tests")
     from test_multimodal import _gradient_png
 
     from tikv_data_compare_spark.operators.multimodal import image_dhash
@@ -204,8 +202,6 @@ def test_dhash_index_stream_chunked_equals_oneshot(spark, tmp_path):
 
 
 def test_dhash_index_ingest_watermark_skip(spark, tmp_path):
-    import sys as _sys
-    _sys.path.insert(0, "/root/repo/tests")
     from test_multimodal import _gradient_png
 
     from tikv_data_compare_spark.streaming.dhash_index_stream import (

@@ -747,3 +747,59 @@ def test_span_family_exchange_counts(spark):
         for name, op in ops.items()
     }
     assert got == expected
+
+
+def test_topk_family_plan_shapes(spark, embeddings, tmp_path):
+    """Plan-shape pins for the eight top-k entry points: (Exchange count,
+    Python-node count) in the formatted plan (which prints each node
+    twice), with and without ``rerank`` where the entry point has it.
+    Python nodes are ``MapInPandas`` (the map-side scorers and cell
+    assigners) and ``FlatMapCoGroupsInPandas`` (the per-cell ADC scorer of
+    the DataFrame-query paths).  A changed count means the shared top-k
+    pipeline moved a shuffle, a broadcast or a Python stage."""
+    from tikv_data_compare_spark.operators import ann_index as ai
+    from tikv_data_compare_spark.operators import similarity as sim
+
+    emb = embeddings
+    q = emb.filter(F.col("vec_id") < 8).select(F.col("vec_id").alias("query_id"), "embedding")
+    path = str(tmp_path / "idx")
+    ai.build_ann_index(emb, path, n_cells=4, m=8, k_codes=16)
+    idx = ai.load_ann_index(spark, path)
+    geo = dict(n_cells=4, n_probe=2, m=8, k_codes=16)
+    ops = {
+        "topk_bruteforce": lambda: sim.topk_bruteforce(emb, k=3, n_queries=4),
+        "topk_lsh": lambda: sim.topk_lsh(emb, k=3, n_queries=4, n_planes=2),
+        "topk_ivf": lambda: sim.topk_ivf(emb, k=3, n_queries=4, n_cells=4, n_probe=2),
+        "topk_ivf_join": lambda: sim.topk_ivf_join(emb, q, k=3, n_cells=4, n_probe=2),
+        "topk_pq": lambda: sim.topk_pq(emb, k=3, n_queries=4, m=8, k_codes=16),
+        "topk_pq/rerank": lambda: sim.topk_pq(emb, k=3, n_queries=4, m=8, k_codes=16, rerank=20),
+        "topk_ivfpq": lambda: sim.topk_ivfpq(emb, k=3, n_queries=4, **geo),
+        "topk_ivfpq/rerank": lambda: sim.topk_ivfpq(emb, k=3, n_queries=4, rerank=20, **geo),
+        "topk_ivfpq_join": lambda: sim.topk_ivfpq_join(emb, q, k=3, **geo),
+        "topk_ivfpq_join/rerank": lambda: sim.topk_ivfpq_join(emb, q, k=3, rerank=20, **geo),
+        "topk_index": lambda: ai.topk_index(idx, q, k=3, n_probe=2),
+        "topk_index/rerank": lambda: ai.topk_index(
+            idx, q, k=3, n_probe=2, rerank=20, emb_for_rerank=emb
+        ),
+    }
+    expected = {
+        "topk_bruteforce": (4, 2),
+        "topk_lsh": (8, 4),
+        "topk_ivf": (6, 2),
+        "topk_ivf_join": (8, 4),
+        "topk_pq": (4, 2),
+        "topk_pq/rerank": (10, 2),
+        "topk_ivfpq": (4, 2),
+        "topk_ivfpq/rerank": (10, 2),
+        "topk_ivfpq_join": (10, 6),
+        "topk_ivfpq_join/rerank": (14, 6),
+        "topk_index": (8, 4),
+        "topk_index/rerank": (12, 4),
+    }
+
+    def shape(df):
+        s = plans.plan_string(df)
+        return s.count("Exchange"), s.count("MapInPandas") + s.count("FlatMapCoGroupsInPandas")
+
+    got = {name: shape(op()) for name, op in ops.items()}
+    assert got == expected

@@ -1,7 +1,7 @@
 """Similarity search tests: numpy path ≡ SQL path, metamorphic duplicates."""
 
 import pytest
-from pyspark.sql import functions as F
+from pyspark.sql import Window, functions as F
 
 from tikv_data_compare_spark.operators import similarity as sim
 
@@ -11,9 +11,32 @@ def emb(embeddings):
     return embeddings.cache()
 
 
+def topk_bruteforce_sql(emb, k: int = 5, n_queries: int = 10):
+    """Pure-SQL exact cosine top-k (norms precomputed once per side): the
+    reference the numpy scan of ``topk_bruteforce`` is checked against."""
+    with_norm = emb.withColumn("nrm", F.expr(f"sqrt({sim._dot('embedding', 'embedding')})"))
+    q = with_norm.filter(F.col("vec_id") < n_queries).select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb"), F.col("nrm").alias("q_nrm")
+    )
+    joined = with_norm.join(F.broadcast(q), F.col("vec_id") != F.col("query_id"))
+    scored = joined.select(
+        "query_id",
+        F.col("vec_id").alias("neighbor_id"),
+        F.expr(
+            "CAST(ROUND(10000.0 * " + sim._dot("q_emb", "embedding") + " / (q_nrm * nrm)) AS BIGINT)"
+        ).alias("cosine_c"),
+    )
+    w = Window.partitionBy("query_id").orderBy(F.desc("cosine_c"), F.asc("neighbor_id"))
+    return (
+        scored.withColumn("rnk", F.row_number().over(w).cast("long"))
+        .filter(F.col("rnk") <= k)
+        .select("query_id", "neighbor_id", "cosine_c", "rnk")
+    )
+
+
 def test_numpy_equals_sql_path(emb):
     np_rows = sorted(map(tuple, sim.topk_bruteforce(emb, k=5, n_queries=5).collect()))
-    sql_rows = sorted(map(tuple, sim.topk_bruteforce_sql(emb, k=5, n_queries=5).collect()))
+    sql_rows = sorted(map(tuple, topk_bruteforce_sql(emb, k=5, n_queries=5).collect()))
     assert np_rows == sql_rows
 
 
@@ -61,9 +84,34 @@ def test_topk_large_k_equals_sql_path(emb):
     """k above the old per-batch 64-candidate cap must still match the exact
     SQL path (VERDICT r2 item 7)."""
     np_rows = sorted(map(tuple, sim.topk_bruteforce(emb, k=100, n_queries=2).collect()))
-    sql_rows = sorted(map(tuple, sim.topk_bruteforce_sql(emb, k=100, n_queries=2).collect()))
+    sql_rows = sorted(map(tuple, topk_bruteforce_sql(emb, k=100, n_queries=2).collect()))
     assert len(np_rows) == 200
     assert np_rows == sql_rows
+
+
+def test_zero_norm_pairs_score_null_like_sql(spark):
+    """A zero-norm vector has no cosine: with one planted as a query and one
+    as a corpus row, and k reaching every candidate, the numpy scan scores
+    those pairs NULL and ranks them after every non-null score, exactly like
+    the SQL reference (and DuckDB, where x / 0.0 is NULL too)."""
+    import numpy as np
+
+    vecs = np.random.RandomState(5).standard_normal((60, 8))
+    vecs[0] = 0.0  # zero-norm query
+    vecs[37] = 0.0  # zero-norm corpus row
+    emb = spark.createDataFrame(
+        [(i, vecs[i].tolist()) for i in range(60)], "vec_id long, embedding array<double>"
+    )
+
+    def rows(df):
+        return sorted(map(tuple, df.collect()), key=lambda r: (r[0], r[1]))
+
+    got = rows(sim.topk_bruteforce(emb, k=60, n_queries=2))
+    assert got == rows(topk_bruteforce_sql(emb, k=60, n_queries=2))
+    assert len(got) == 2 * 59
+    assert all(r[2] is None for r in got if r[0] == 0)  # query 0: every pair NULL
+    last = [r for r in got if r[0] == 1 and r[3] >= 58]  # query 1: NULLs rank last
+    assert sorted((r[1], r[2]) for r in last) == [(0, None), (37, None)]
 
 
 def test_lsh_buckets_high_dim_plan_builds(spark):

@@ -39,9 +39,12 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from tikv_data_compare_spark.operators.similarity import (
     _assign_encode,
+    _cell_d2,
     _ivfpq_join_topk,
-    _train_pq_from_rows,
+    _train_ivfpq,
     _train_sample_rows,
+    _unit,
+    _vecs,
     resolve_n_probe,
 )
 
@@ -52,7 +55,7 @@ def _write_meta(spark: SparkSession, path: str, meta: dict) -> None:
     """Replace the one-row meta table via the shared write-then-swap seam
     (functions.fsutil.swap_commit): a plain mode('overwrite') deletes the
     directory before rewriting, so a concurrent ``load_ann_index`` could
-    read zero/partial rows of a healthy index (r8 review)."""
+    read zero/partial rows of a healthy index."""
     from tikv_data_compare_spark.functions.fsutil import swap_commit
 
     swap_commit(
@@ -85,31 +88,15 @@ def _pq_quant_mse(src: DataFrame, books, sample_rows: int) -> list:
     """
     import numpy as np
 
-    rows = (
-        src.select("embedding", F.xxhash64(F.col("embedding")).alias("_h"))
-        .orderBy("_h")
-        .limit(sample_rows)
-        .collect()
-    )
+    rows = _train_sample_rows(src, sample_rows, "embedding")
     rows = [r for r in rows if r["embedding"] is not None]
     if not rows:
         raise ValueError("cannot measure PQ quantization error on an empty frame")
-    x = np.array([list(r["embedding"]) for r in rows], dtype=np.float64)
-    norms = np.linalg.norm(x, axis=1, keepdims=True)
-    norms[norms == 0] = 1.0
-    x /= norms
+    x = _unit(_vecs(r["embedding"] for r in rows))
     books = np.asarray(books)
-    m, _, sub_d = books.shape
-    out = []
-    for j in range(m):
-        xj = x[:, j * sub_d : (j + 1) * sub_d]
-        d2 = (
-            (xj**2).sum(axis=1, keepdims=True)
-            - 2.0 * (xj @ books[j].T)
-            + (books[j] ** 2).sum(axis=1)[None, :]
-        )
-        out.append(float(np.maximum(d2.min(axis=1), 0.0).mean()))
-    return out
+    sub_d = books.shape[2]
+    d2s = (_cell_d2(x[:, j * sub_d : (j + 1) * sub_d], books[j]) for j in range(books.shape[0]))
+    return [float(np.maximum(d2.min(axis=1), 0.0).mean()) for d2 in d2s]
 
 
 def _codebook_rows(cent, books):
@@ -148,20 +135,8 @@ def build_ann_index(
     """
     spark = emb.sparkSession
     src = emb.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("embedding"))
-    # one trainer sample collect + one fused assign+encode Arrow pass
-    # (r18; byte-identical math — similarity._assign_encode): the build's
-    # corpus scan crosses the Python boundary once instead of twice
-    from tikv_data_compare_spark.operators.similarity import (
-        _train_centroids_from_rows,
-    )
-
-    sample = _train_sample_rows(src, sample_rows, "embedding")
-    cent = _train_centroids_from_rows(sample, n_cells, seed, "embedding")
-    books = _train_pq_from_rows(sample, m, k_codes, seed, "embedding")
-    cent_bc = spark.sparkContext.broadcast(cent)
-    books_bc = spark.sparkContext.broadcast(books)
-    vectors = _assign_encode(src, cent_bc, books_bc)
-    vectors.write.mode("overwrite").parquet(f"{path}/vectors")
+    cent, books = _train_ivfpq(src, n_cells, m, k_codes, sample_rows, seed)
+    _assign_encode(src, cent, books).write.mode("overwrite").parquet(f"{path}/vectors")
     spark.createDataFrame(
         _codebook_rows(cent, books), "kind string, i long, j long, vals array<double>"
     ).coalesce(1).write.mode("overwrite").parquet(f"{path}/codebooks")
@@ -217,7 +192,7 @@ def load_ann_index(spark: SparkSession, path: str) -> AnnIndex:
             f"{meta['n_cells']} cells"
         )
     # a truncated codebooks table would leave zero codebook entries and rank
-    # candidates arbitrarily — fail loudly like the centroid path (r8 review)
+    # candidates arbitrarily — fail loudly like the centroid path
     if n_book != meta["m"] * meta["k_codes"]:
         raise ValueError(
             f"ANN index at {path!r} is corrupt: {n_book} codebook rows for "
@@ -285,7 +260,7 @@ def append_to_index(emb_new: DataFrame, path: str, id_col: str = "vec_id",
     # validate EVERY row's dimension up front (one bounded agg over the
     # append set): a first-row-only probe lets a mixed-dim/NULL append
     # pass and die deep in the encode job with a raw executor traceback
-    # instead of the documented clean ValueError (r8 review).  size(NULL)
+    # instead of the documented clean ValueError.  size(NULL)
     # is -1 under legacy sizeOfNull, so NULL embeddings are caught too.
     n_bad = src.filter(F.size("embedding") != idx.meta["dim"]).count()
     if n_bad:
@@ -317,7 +292,7 @@ def append_to_index(emb_new: DataFrame, path: str, id_col: str = "vec_id",
     build_mse = idx.meta.get("pq_mse")
     # empty appends bypass the gate: there is no distribution to measure
     # and nothing an empty append can degrade — pipelines legitimately
-    # append whatever a possibly-empty upstream filter yields (r9 ADVICE)
+    # append whatever a possibly-empty upstream filter yields
     if build_mse is not None and on_drift != "skip" and not src.isEmpty():
         new_mse = _pq_quant_mse(src, idx.books, idx.meta["sample_rows"])
         # a small absolute floor so a near-lossless build (mse ~ 0, e.g.
@@ -342,11 +317,9 @@ def append_to_index(emb_new: DataFrame, path: str, id_col: str = "vec_id",
             import warnings
 
             warnings.warn(msg, UserWarning, stacklevel=2)
-    cent_bc = spark.sparkContext.broadcast(np.asarray(idx.centroids))
-    books_bc = spark.sparkContext.broadcast(np.asarray(idx.books))
-    # fused assign+encode (r18) — identical (cell, code) per row, one
-    # Arrow pass over the appended batch instead of two
-    new_vecs = _assign_encode(src, cent_bc, books_bc)
+    # the frozen quantizers assign and encode in one Arrow pass, the same
+    # (cell, code) per row as the build
+    new_vecs = _assign_encode(src, np.asarray(idx.centroids), np.asarray(idx.books))
     try:
         new_vecs.write.mode("append").parquet(f"{path}/vectors")
     finally:
@@ -371,7 +344,7 @@ def compact_index(
     target_files: int | None = None,
 ) -> dict:
     """Rewrite the index's ``vectors/`` table into a bounded number of
-    parquet files, CLUSTERED BY CELL (r13, VERDICT r12 task 7).
+    parquet files, CLUSTERED BY CELL.
 
     ``append_to_index`` writes mode('append'), so a thousand-epoch stream
     accumulates a thousand small fragments — each query then pays a
@@ -448,7 +421,6 @@ def topk_index(
     """
     import numpy as np
 
-    spark = queries.sparkSession
     # 'auto' sizes the probe from the index's OWN stored geometry — the
     # meta n_vectors count (maintained across appends) is exactly the
     # corpus-density input resolve_n_probe needs, no extra scan
@@ -465,12 +437,8 @@ def topk_index(
             f"query dim {first['d']} != index dim {index.meta['dim']} — an "
             "index built with one geometry cannot be queried with another"
         )
-    cent_bc = spark.sparkContext.broadcast(np.asarray(index.centroids))
-    books_bc = spark.sparkContext.broadcast(np.asarray(index.books))
     qdf = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_emb"))
-    emb = (
-        emb_for_rerank.select("vec_id", "embedding") if emb_for_rerank is not None else None
-    )
     return _ivfpq_join_topk(
-        emb, qdf, index.vectors, cent_bc, books_bc, k, n_probe, rerank, exclude_self
+        emb_for_rerank, qdf, index.vectors, np.asarray(index.centroids),
+        np.asarray(index.books), k, n_probe, rerank, exclude_self,
     )

@@ -115,7 +115,7 @@ def _assign_broadcast(
 ) -> DataFrame:
     """The scale path for centroid assignment: broadcast a (k, dim) numpy
     matrix and score each Arrow batch with row-blocked matmuls — the same
-    seam IVF uses (similarity._assign_cells), so the plan carries a
+    seam IVF uses (similarity._ivf_corpus), so the plan carries a
     ~k·dim·8-byte broadcast instead of a k·dim-term SQL literal.
 
     Determinism: each row's assignment depends only on its own vector and

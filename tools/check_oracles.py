@@ -8,7 +8,8 @@ row values (columns sorted by name — the driver's documented compare).
 
 Usage:  python tools/check_oracles.py [query_name ...]
         python tools/check_oracles.py --all [--out tools/oracle_sweep.jsonl]
-Exit 0 iff every checked query matches.
+Exit 0 iff every checked query matches; exit 2 on a usage error, including
+a query name that is not in the registry.
 
 ``--all`` (r17, VERDICT r16 task 8): the committed-artifact form of the
 full sweep — runs every registry row (same as passing no names) AND
@@ -82,6 +83,13 @@ def main():
             sweep_out = os.path.join(
                 os.path.dirname(os.path.abspath(__file__)), "oracle_sweep.jsonl"
             )
+    queries = entrymod.queries()
+    # a name outside the registry would otherwise filter to nothing and
+    # read as green: reject it before any Spark work
+    unknown = sorted(set(args) - set(queries))
+    if unknown:
+        print(f"unknown query name(s): {' '.join(unknown)}", file=sys.stderr)
+        sys.exit(2)
     only = set(args)
     records: list[dict] = []
 
@@ -91,7 +99,6 @@ def main():
     for t in TABLES:
         con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
 
-    queries = entrymod.queries()
     # explicit sf_dir threading (r15) — the env var set above remains only
     # as the fallback for no-arg harnesses like the driver's own gate
     oracles = entrymod.oracle_sql(sf_dir=sf_dir)
