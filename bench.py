@@ -492,8 +492,10 @@ def main():
     # the 9-run A/B (BASELINE.md r7 warmth probe) showed JIT/codegen warmth
     # moves identical plans 28-76s -> 5.6s — bigger than any knob measured.
     # The limit(1) warm-up above compiles the session, not the operators;
-    # executing the full curation plan once brings the JVM to the
-    # steady-state every later min-of-N actually measures.
+    # executing the full curation plan once compiles its ~190 generated
+    # classes, and get_spark's 2000-entry generated-code cache keeps them
+    # for the timed runs (Spark's default of 100 entries would not hold
+    # them), so min-of-N measures a warm plan.
     if os.environ.get("SPARK_GRAFT_BENCH_WARMUP", "1") not in ("", "0"):
         run_forced(benches["curation_pipeline"]())
 

@@ -105,6 +105,37 @@ def test_train_pq_validates_inputs(spark, emb):
         sim.train_pq(empty)
 
 
+@pytest.mark.parametrize("k_codes", [1, 300])
+def test_every_pq_trainer_checks_k_codes_before_any_job(spark, emb, tmp_path, k_codes):
+    """The uint8 codes hold 2..256 codebook entries; every PQ-training path
+    rejects other sizes before its sample collect, so no Spark job runs
+    (300 would otherwise train and wrap its codes silently).  The IVFPQ
+    paths take ``n_probe='auto'``, whose corpus count also comes after."""
+    from tikv_data_compare_spark.operators import ann_index as ai
+
+    calls = {
+        "train_pq": lambda: sim.train_pq(emb, k_codes=k_codes),
+        "topk_ivfpq": lambda: sim.topk_ivfpq(emb, n_probe="auto", k_codes=k_codes),
+        "topk_ivfpq_join": lambda: sim.topk_ivfpq_join(
+            emb, _qdf(emb, 4), n_probe="auto", k_codes=k_codes
+        ),
+        "build_ann_index": lambda: ai.build_ann_index(
+            emb, str(tmp_path / "idx"), k_codes=k_codes
+        ),
+    }
+    sc = spark.sparkContext
+    for name, call in calls.items():
+        group = f"k_codes_check_{name}_{k_codes}"
+        sc.setJobGroup(group, "k_codes validation must be job-free")
+        try:
+            with pytest.raises(ValueError, match="k_codes"):
+                call()
+            jobs = sc.statusTracker().getJobIdsForGroup(group)
+        finally:
+            sc.setJobGroup(None, None)
+        assert list(jobs) == [], f"{name} ran jobs before rejecting k_codes: {jobs}"
+
+
 def test_topk_pq_rerank_covering_corpus_equals_bruteforce(emb):
     """rerank >= corpus size makes the refine stage exact-score every ADC
     candidate, so the result must equal brute force EXACTLY — pins the

@@ -1,4 +1,5 @@
-"""Session plumbing: executor self-shipping and scale_out invariants."""
+"""Session plumbing: executor self-shipping, the generated-code cache and
+scale_out invariants."""
 
 import zipfile
 
@@ -27,3 +28,22 @@ def test_ship_package_idempotent(spark):
     ship_package(spark)
     ship_package(spark)
     assert list(spark.sparkContext.listFiles) == before
+
+
+def test_codegen_cache_keeps_a_warm_working_set(spark):
+    """get_spark sizes Spark's generated-code cache past a curate call's
+    ~190 classes; at the default of 100 entries each call evicted its own
+    classes and compiled them again.  80 distinct queries of 2 classes each
+    overflow 100 entries, and a second pass over them compiles nothing."""
+    assert int(spark.conf.get("spark.sql.codegen.cache.maxEntries")) >= 2000
+    jvm = spark.sparkContext._jvm
+    compiles = jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+
+    def one_pass():
+        for i in range(1, 81):
+            spark.range(8).selectExpr(f"id * {i} + {i} AS x").collect()
+
+    one_pass()
+    before = compiles.getCount()
+    one_pass()
+    assert compiles.getCount() - before == 0

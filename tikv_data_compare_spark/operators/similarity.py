@@ -610,6 +610,7 @@ def _train_centroids(rows: list, n_cells: int, seed: int, vec_col: str):
 
 def _train_ivfpq(emb: DataFrame, n_cells: int, m: int, k_codes: int, sample_rows: int, seed: int):
     """(centroids, PQ codebooks), both trained on ONE sample collect."""
+    _check_k_codes(k_codes)
     sample = _train_sample_rows(emb, sample_rows, "embedding")
     return (
         _train_centroids(sample, n_cells, seed, "embedding"),
@@ -764,14 +765,20 @@ def train_pq(
     against codes needs only a per-query lookup table of ``m × k_codes``
     partial dot products (ADC, Jégou et al. 2011).
     """
+    _check_k_codes(k_codes)
+    return _train_pq_from_rows(
+        _train_sample_rows(emb, sample_rows, vec_col), m, k_codes, seed, vec_col
+    )
+
+
+def _check_k_codes(k_codes: int) -> None:
+    """Reject a codebook size the uint8 codes cannot hold; the PQ trainers
+    call it before their sample collect."""
     if not 2 <= k_codes <= 256:
         raise ValueError(
             f"PQ codes are stored as one uint8 per subspace: k_codes must be "
             f"in [2, 256], got {k_codes}"
         )
-    return _train_pq_from_rows(
-        _train_sample_rows(emb, sample_rows, vec_col), m, k_codes, seed, vec_col
-    )
 
 
 def _train_pq_from_rows(rows: list, m: int, k_codes: int, seed: int, vec_col: str):
@@ -941,8 +948,8 @@ def topk_ivfpq(
     ``n_probe >= n_cells`` with ``rerank >= corpus`` degenerates to exact
     brute force (the contract-test configuration).
     """
-    n_probe = _n_probe(emb, n_probe, n_cells, k, rerank)
     cent, books = _train_ivfpq(emb, n_cells, m, k_codes, sample_rows, seed)
+    n_probe = _n_probe(emb, n_probe, n_cells, k, rerank)
 
     def payload_of(qraw):
         return _luts(qraw, books), books, cent, _nearest_cells(qraw, cent, n_probe)
@@ -979,8 +986,8 @@ def topk_ivfpq_join(
     ``n_probe >= n_cells`` with ``rerank >= corpus`` degenerates to exact
     brute force (the contract-test configuration).
     """
-    n_probe = _n_probe(emb, n_probe, n_cells, k, rerank)
     cent, books = _train_ivfpq(emb, n_cells, m, k_codes, sample_rows, seed)
+    n_probe = _n_probe(emb, n_probe, n_cells, k, rerank)
     corpus = _assign_encode(emb.select("vec_id", "embedding"), cent, books)
     qdf = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_emb"))
     return _ivfpq_join_topk(emb, qdf, corpus, cent, books, k, n_probe, rerank, exclude_self)

@@ -25,6 +25,7 @@ caller's handle (``curate``'s ``kept``); the caller unpersists it.
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import SparkSession
 
@@ -56,6 +57,14 @@ def get_spark(app_name: str = "tikv-data-compare-spark", cpus: int | None = None
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # let Python DataSources (sources/scandump.py) absorb range predicates
         .config("spark.sql.python.filterPushdown.enabled", "true")
+        # Spark keeps 100 generated classes by default, but one curate() call
+        # compiles 175-190 (about 260 distinct over six calls).  At 100
+        # entries each warm call evicts its own classes and Janino + HotSpot
+        # compile ~170 again; at 2000 it compiles 4-30 and spends ~15% less
+        # cpu (4 cores).  kv_compare (48 classes) and dump_roundtrip (80) fit
+        # either way.  The conf is static: it can only be set here, where
+        # the session is built.
+        .config("spark.sql.codegen.cache.maxEntries", "2000")
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
@@ -149,7 +158,14 @@ _SHUFFLE_NODE_TOKENS = (
     "Except",
 )
 
-_SHUFFLE_NODE_RE = None
+# node heads after the tree prefix ([+:|- ] drawing chars); plain
+# ``Repartition <n>, true`` = repartition(n) (round-robin shuffle) while
+# ``..., false`` = coalesce (no exchange — probe-safe)
+_SHUFFLE_NODE_RE = re.compile(
+    r"^[+:\-|\s']*(?:%s)\b|^[+:\-|\s']*Repartition \d+, true"
+    % "|".join(_SHUFFLE_NODE_TOKENS),
+    re.MULTILINE,
+)
 
 
 def _has_shuffle_ancestor(df) -> bool:
@@ -157,33 +173,20 @@ def _has_shuffle_ancestor(df) -> bool:
     plans to a shuffle.  Analysis-only — never optimizes or executes (the
     whole point: ``.rdd`` on such frames runs jobs under AQE).
 
-    r19 (ADVICE r18): tokens are matched as plan-node HEADS (the first
-    word after the tree-drawing prefix of each line), not free substrings
-    — a relation/column name containing 'Join' or 'Sort' no longer
-    silently disables widening.  And when the JVM plan cannot be
-    inspected for a transient py4j reason the answer is now True (skip
-    the probe — the safe direction: probing a shuffle-shaped frame runs
-    its upstream stages as real jobs); only the no-JVM-plan mock case
-    (AttributeError: no ``_jdf``) falls through to probing, which mocks
-    stub out anyway."""
+    Tokens match plan-node HEADS (the first word after the tree-drawing
+    prefix of each line), not free substrings, so a relation or column
+    name containing 'Join' or 'Sort' does not disable widening.  When the
+    JVM plan cannot be inspected for a transient py4j reason the answer is
+    True (skip the probe — the safe direction: probing a shuffle-shaped
+    frame runs its upstream stages as real jobs); only a frame with no JVM
+    plan at all (AttributeError: no ``_jdf``, as in mocks) answers False,
+    so the caller probes it."""
     try:
         plan = df._jdf.queryExecution().analyzed().toString()
     except AttributeError:  # no JVM plan (mocks): fall back to probing
         return False
     except Exception:  # noqa: BLE001 — transient py4j failure: fail CLOSED
         return True  # (skip the probe; widening is only ever a perf aid)
-    global _SHUFFLE_NODE_RE
-    if _SHUFFLE_NODE_RE is None:
-        import re
-
-        # node heads after the tree prefix ([+:|- ] drawing chars); plain
-        # ``Repartition <n>, true`` = repartition(n) (round-robin shuffle)
-        # while ``..., false`` = coalesce (no exchange — probe-safe)
-        _SHUFFLE_NODE_RE = re.compile(
-            r"^[+:\-|\s']*(?:%s)\b|^[+:\-|\s']*Repartition \d+, true"
-            % "|".join(_SHUFFLE_NODE_TOKENS),
-            re.MULTILINE,
-        )
     return bool(_SHUFFLE_NODE_RE.search(plan))
 
 
@@ -206,6 +209,13 @@ def tune(spark: SparkSession) -> SparkSession:
     runtime-configurable and required for deterministic oracle comparison
     (UTC timestamps, non-ANSI arithmetic so 64-bit hash mixing wraps instead
     of raising) and for scale (AQE).
+
+    It does not size the generated-code cache the way :func:`get_spark`
+    does: ``spark.sql.codegen.cache.maxEntries`` is a static conf, and
+    ``spark.conf.set`` on it raises ``CANNOT_MODIFY_STATIC_CONFIG``.  A
+    session built by the caller therefore keeps Spark's default of 100
+    entries, and a warm ``curate`` call recompiles most of its ~190
+    classes, unless the caller's own builder sets the conf.
     """
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.ansi.enabled", "false")
