@@ -39,6 +39,14 @@ def _docs(spark):
     return spark.createDataFrame(rows, "doc_id long, text string")
 
 
+def _python_rdds(df) -> list[str]:
+    """RDD lineages of the frame's leaf scans that run a PythonRDD (the
+    main lineage alone hides a broadcast side's scan)."""
+    leaves = df._jdf.queryExecution().sparkPlan().collectLeaves()
+    lineages = (leaves.apply(i).execute().toDebugString() for i in range(leaves.size()))
+    return [s for s in lineages if "PythonRDD" in s]
+
+
 def test_curate_stages_drop_planted_offenders(spark):
     kept, attrition = curate(_docs(spark))
     kept_ids = {r["doc_id"] for r in kept.collect()}
@@ -52,6 +60,23 @@ def test_curate_stages_drop_planted_offenders(spark):
     for a, b in zip(order, order[1:]):
         assert rep[a][1] == rep[b][0]
     assert rep["repetition"][1] == 2
+    # the report is a JVM literal frame: no PythonRDD behind it
+    assert _python_rdds(attrition) == []
+    assert attrition.schema.simpleString() == (
+        "struct<stage:string,n_in:bigint,n_out:bigint,n_dropped:bigint>"
+    )
+
+
+def test_literal_frames_start_no_python_tasks(spark, documents):
+    """The stopword tables of text_stats/lang_id are JVM literal frames:
+    ``createDataFrame(<list>)`` would serve them through a PythonRDD and
+    start Python tasks on every action (curate's attrition report is
+    checked in test_curate_stages_drop_planted_offenders)."""
+    from tikv_data_compare_spark.operators import text as tx
+
+    docs = documents.select("doc_id", "text")
+    assert _python_rdds(tx.text_stats(docs)) == []
+    assert _python_rdds(tx.lang_id(docs)) == []
 
 
 def test_curate_null_text_doc_counted_as_dropped(spark):

@@ -1,6 +1,9 @@
-"""Scan-dump DataSource tests: format roundtrip, chunked partitions,
-range pushdown, malformed input, and the global-counter determinism
-regression that the dump roundtrip exposed."""
+"""Scan-dump source tests: format roundtrip, split partitions, key range,
+malformed input, and the global-counter determinism regression that the
+dump roundtrip exposed."""
+
+import glob
+import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -32,26 +35,39 @@ def test_dump_roundtrip_bitexact(spark, dump):
 
 
 def test_dump_chunk_partitions(spark, dump):
-    """A dump splits into ~chunk_bytes partitions at line boundaries with no
-    row lost or duplicated — one big file fans out across the cluster."""
+    """The text source splits a dump into ~maxPartitionBytes partitions at
+    line boundaries with no row lost or duplicated — one big file fans out
+    across the cluster."""
     small, path = dump
     one = load_scan_dump(spark, path)
-    many = load_scan_dump(spark, path, chunk_bytes=2048)
-    assert many.rdd.getNumPartitions() > one.rdd.getNumPartitions()
-    assert many.count() == small.df.count()
-    assert many.select(F.sum("cnt")).first()[0] == one.select(F.sum("cnt")).first()[0]
+    n_default = one.rdd.getNumPartitions()
+    total = one.select(F.sum("cnt")).first()[0]
+    conf = "spark.sql.files.maxPartitionBytes"
+    old = spark.conf.get(conf)
+    spark.conf.set(conf, "2048")
+    try:
+        many = load_scan_dump(spark, path)
+        assert many.rdd.getNumPartitions() > n_default
+        assert many.count() == small.df.count()
+        assert many.select(F.sum("cnt")).first()[0] == total
+    finally:
+        spark.conf.set(conf, old)
 
 
 def test_dump_range_pushdown(spark, dump):
-    """key >= lo AND key < hi is absorbed by the reader: the post-scan Filter
-    keeps only the isnotnull guard, and results match the in-Spark filter."""
+    """key >= lo AND key < hi runs as a Filter right above the JVM text
+    scan (no Python DataSource, no shuffle in between), and results match
+    the in-Spark filter on the original frame."""
     small, path = dump
     keys = sorted(r["key"] for r in small.df.select("key").collect())
     lo, hi = keys[300], keys[1200]
     back = load_scan_dump(spark, path)
     filt = back.filter(F.col("key") >= F.lit(lo)).filter(F.col("key") < F.lit(hi))
-    plan = filt._jdf.queryExecution().executedPlan().toString()
-    assert ">=" not in plan and "<" not in plan.replace("<=", "")  # range absorbed
+    lines = filt._jdf.queryExecution().executedPlan().toString().splitlines()
+    at = next(i for i, l in enumerate(lines) if "Filter" in l and ">=" in l)
+    below = lines[at + 1:]
+    assert any("FileScan text" in l for l in below), lines
+    assert not any("BatchScan" in l or "Exchange" in l for l in below), lines
     expected = small.df.filter(F.col("key") >= F.lit(lo)).filter(F.col("key") < F.lit(hi))
     assert filt.count() == expected.count() == 900
 
@@ -67,8 +83,43 @@ def test_dump_explicit_range_options(spark, dump):
 def test_dump_malformed_line_raises(spark, tmp_path):
     p = tmp_path / "bad_scan.log"
     p.write_text("key:00, value:11, cnt:1.\nnot a dump line\n")
+    df = load_scan_dump(spark, str(p))
+    with pytest.raises(Exception, match="malformed"):
+        df.collect()
+    # the check survives column pruning
+    with pytest.raises(Exception, match="malformed"):
+        df.count()
+    with pytest.raises(Exception, match="malformed"):
+        df.select("value").count()
+
+
+@pytest.mark.parametrize(
+    "line",
+    ["key:00a, value:11, cnt:1.", "key:00, value:11, cnt:9223372036854775808."],
+    ids=["odd_hex", "cnt_overflow"],
+)
+def test_dump_out_of_format_values_raise(spark, tmp_path, line):
+    """Odd-length hex (which unhex would pad) and a cnt past 2^63-1 (which a
+    cast would turn into NULL) are malformed lines, not data."""
+    p = tmp_path / "bad_scan.log"
+    p.write_text(f"key:00, value:11, cnt:1.\n{line}\n")
     with pytest.raises(Exception, match="malformed"):
         load_scan_dump(spark, str(p)).collect()
+
+
+def test_dump_crlf_and_blank_lines(spark, dump, tmp_path):
+    """A CRLF copy of the dump with blank and whitespace-only lines reads
+    the same rows as the LF original."""
+    _, path = dump
+    lines = []
+    for f in sorted(glob.glob(os.path.join(path, "part-*"))):
+        with open(f) as fh:
+            lines += fh.read().splitlines()
+    crlf = tmp_path / "SRC_scan.log.crlf"
+    crlf.write_bytes(("\r\n".join(["", *lines[:10], "  ", *lines[10:], "\t"]) + "\r\n").encode())
+    lf, got = load_scan_dump(spark, path), load_scan_dump(spark, str(crlf))
+    assert got.count() == lf.count() == len(lines)
+    assert got.exceptAll(lf).count() == 0
 
 
 def test_dump_missing_path_raises(spark):

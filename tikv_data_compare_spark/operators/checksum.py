@@ -207,7 +207,10 @@ def compare_checksum(
                 _byte_len(Keyed(df, both.keys, both.values), tags, fast=(algo == "xxhash64"))
             ).alias("total_bytes"),
         )
-        .orderBy(F.desc("side"))  # src before dst, deterministic report order
+        # src before dst, deterministic report order; a 2-row report needs
+        # no range-partitioning sample job and shuffle, so sort in place
+        .coalesce(1)
+        .sortWithinPartitions(F.desc("side"))
     )
 
 

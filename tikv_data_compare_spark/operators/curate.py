@@ -531,7 +531,8 @@ def curate(
         pool.shutdown(wait=True, cancel_futures=True)
         for f in cached if done or kept is None else [*cached, kept]:
             f.unpersist()
-    attrition = spark.createDataFrame(
+    attrition = tx._literal_frame(
+        spark,
         [
             (g[0], counts[i], counts[i + 1], counts[i] - counts[i + 1])
             for i, g in enumerate(gates)

@@ -20,6 +20,22 @@ def _stopwords():
     return STOPWORDS
 
 
+def _literal_frame(spark, rows, ddl: str) -> DataFrame:
+    """A small driver-side table as a JVM literal frame.
+
+    ``spark.createDataFrame(<list>)`` serves its rows through a PythonRDD,
+    so every action on it starts Python tasks; an inlined array of struct
+    literals over a one-row range stays in the JVM."""
+    schema = T.StructType.fromDDL(ddl)
+    structs = [
+        F.struct(*[F.lit(v).cast(f.dataType).alias(f.name) for v, f in zip(row, schema)])
+        for row in rows
+    ]
+    return spark.range(0, 1, 1, 1).select(
+        F.inline(F.array(*structs).cast(T.ArrayType(schema)))
+    )
+
+
 def text_stats(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
     """Per-document quality stats: token count, char count, mean word length
     (scaled ×10000), stopword count, punctuation count.
@@ -30,7 +46,7 @@ def text_stats(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") ->
     """
     spark = df.sparkSession
     sw = sorted({w for ws in _stopwords().values() for w in ws})
-    swdf = spark.createDataFrame([(w,) for w in sw], "w string")
+    swdf = _literal_frame(spark, [(w,) for w in sw], "w string")
     words = df.select(id_col, F.explode(F.split(F.col(text_col), " ")).alias("w"))
     sw_counts = (
         words.join(F.broadcast(swdf), "w")
@@ -69,8 +85,8 @@ def lang_id(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> Da
     spark = df.sparkSession
     stop = _stopwords()
     langs = sorted(stop)
-    swdf = spark.createDataFrame(
-        [(w, la) for la in langs for w in stop[la]], "w string, sw_lang string"
+    swdf = _literal_frame(
+        spark, [(w, la) for la in langs for w in stop[la]], "w string, sw_lang string"
     )
     words = df.select(id_col, F.explode(F.split(F.col(text_col), " ")).alias("w"))
     counts = (

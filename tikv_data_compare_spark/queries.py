@@ -171,11 +171,11 @@ def _dump_key(orderkey: int) -> bytes:
 
 def q_scan_dump_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S1/S4 + the scan-dump *source*: write the reference's scan.log text
-    format (scan/scan.go:35-61) with ``export_hex``, re-open it through the
-    ``tikv_scandump`` Python DataSource (per-chunk partitions), and scan a
-    key range — the range predicate is absorbed by the reader's
-    ``pushFilters`` (the Spark analogue of the range riding inside the Scan
-    RPC, scan/scan.go:45).  Output = the dump rows in range, re-hexed, with
+    format (scan/scan.go:35-61) with ``export_hex``, re-open it with
+    ``load_scan_dump`` (Spark's text source plus a format-checking
+    projection), and scan a key range — a Filter on ``key`` right above the
+    text scan (the Spark analogue of the range riding inside the Scan RPC,
+    scan/scan.go:45).  Output = the dump rows in range, re-hexed, with
     their original global running counters."""
     import os
 
@@ -195,7 +195,7 @@ def q_scan_dump_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     export_hex(Keyed(kv), path=dump)
 
     lo, hi = (_dump_key(b) for b in DUMP_RANGE)
-    back = load_scan_dump(spark, dump, chunk_bytes=1 << 20)
+    back = load_scan_dump(spark, dump)
     return (
         back.filter(F.col("key") >= F.lit(lo))
         .filter(F.col("key") < F.lit(hi))

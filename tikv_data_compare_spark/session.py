@@ -55,8 +55,6 @@ def get_spark(app_name: str = "tikv-data-compare-spark", cpus: int | None = None
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        # let Python DataSources (sources/scandump.py) absorb range predicates
-        .config("spark.sql.python.filterPushdown.enabled", "true")
         # Spark keeps 100 generated classes by default, but one curate() call
         # compiles 175-190 (about 260 distinct over six calls).  At 100
         # entries each warm call evicts its own classes and Janino + HotSpot
@@ -226,9 +224,5 @@ def tune(spark: SparkSession) -> SparkSession:
     try:
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     except Exception:  # noqa: BLE001 — conf removed in some builds; events reader falls back
-        pass
-    try:
-        spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
-    except Exception:  # noqa: BLE001 — absent pre-4.1; scandump falls back to post-scan Filter
         pass
     return ship_package(spark)

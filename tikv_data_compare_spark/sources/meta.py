@@ -9,8 +9,8 @@ module adds the *source-level metadata round-trip*:
 
 - ``write_dump_meta`` drops a ``_META.json`` sidecar next to a scan dump
   (api version, source name, schema kind).  ``export_hex`` writes it
-  automatically; files starting with ``_`` are ignored by both the
-  scandump reader and Spark's own file sources, so the sidecar is invisible
+  automatically; files starting with ``_`` are ignored by Spark's
+  file sources (the scandump reader is one), so the sidecar is invisible
   to the data path.
 - ``read_meta`` recovers a :class:`SourceMeta` from a dump directory (the
   sidecar), a bare dump file (defaults), or a parquet path (schema-derived).

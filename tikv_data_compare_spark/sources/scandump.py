@@ -4,226 +4,79 @@ The reference's ``scan`` subcommand streams a RawKV cluster to a text dump,
 one line per pair: ``key:<HEX>, value:<HEX>, cnt:<N>.`` (scan/scan.go:35-61;
 the format string is scan/scan.go:52).  That dump is the reference's only
 durable export — a real user migrating off the reference starts from either
-a live cluster or one of these files.  This module opens such dumps as a
-Spark DataFrame ``(key binary, value binary, cnt bigint)`` via the Python
-DataSource API, with:
+a live cluster or one of these files.  :func:`load_scan_dump` opens such
+dumps as a Spark DataFrame ``(key binary, value binary, cnt bigint)`` with
+Spark's built-in text source and one projection, so a dump read runs in the
+JVM and starts no Python worker:
 
-- **per-chunk partitions**: each file is split into ~``chunk_bytes`` byte
-  ranges at line boundaries (the same recipe Spark's own text source uses),
-  so one multi-GB dump fans out across the cluster instead of pinning one
-  task per file;
-- **key-range pushdown**: ``key >= X`` / ``key < Y`` predicates (and the
-  explicit ``start_key``/``end_key`` hex options) are evaluated inside the
-  reader while parsing — rows outside the range never reach Spark, the
-  Python analogue of the reference shipping the range inside the Scan RPC
-  (scan/scan.go:45).
+- **partitions**: the text source splits each file at line boundaries into
+  ~``spark.sql.files.maxPartitionBytes`` pieces, so one multi-GB dump fans
+  out across the cluster instead of pinning one task per file;
+- **format check**: every non-blank line must match the format, with an
+  even number of hex digits per field and a ``cnt`` that fits a bigint; the
+  check is a ``Filter`` (column pruning cannot drop it) that raises naming
+  the file and the line;
+- **key range**: ``start``/``end`` are plain ``[start, end)`` filters on
+  ``key`` (unsigned bytewise order), the analogue of the range riding in
+  the Scan RPC (scan/scan.go:45).
 
-Usage::
-
-    spark.dataSource.register(ScanDumpDataSource)
-    df = (spark.read.format("tikv_scandump")
-          .option("path", "/dumps/SRC_scan.log.2024-01-01T00.00.00Z")
-          .load())
-    df.filter(df.key >= lo).filter(df.key < hi)   # pushed into the reader
-
-``export_hex`` (operators/scan.py) writes this exact line format, so a dump
-produced by this engine round-trips through this source bit-for-bit.
+Directories are read without their ``_``/``.`` files (the ``_META.json``
+sidecar), and globs are accepted.  ``export_hex`` (operators/scan.py)
+writes this exact line format, so a dump produced by this engine
+round-trips through this source bit-for-bit.
 """
 
 from __future__ import annotations
 
-import os
-import re
-from dataclasses import dataclass
-from typing import Iterable, Iterator, List
+from pyspark.errors import AnalysisException
+from pyspark.sql import functions as F
 
-from pyspark.sql.datasource import (
-    DataSource,
-    DataSourceReader,
-    Filter,
-    GreaterThan,
-    GreaterThanOrEqual,
-    InputPartition,
-    LessThan,
-    LessThanOrEqual,
-    Not,
-)
-
-# scan/scan.go:52 — fmt.Sprintf("key:%s, value:%s, cnt:%d.\n", HEX, HEX, n)
-_LINE = re.compile(rb"^key:([0-9A-Fa-f]*), value:([0-9A-Fa-f]*), cnt:(\d+)\.\s*$")
-
-_DEFAULT_CHUNK = 64 * 1024 * 1024
+# scan/scan.go:52 — fmt.Sprintf("key:%s, value:%s, cnt:%d.\n", HEX, HEX, n);
+# trailing whitespace (a CRLF file's \r among it) is accepted
+_LINE = r"^key:(?:[0-9A-Fa-f]{2})*, value:(?:[0-9A-Fa-f]{2})*, cnt:[0-9]+\.\s*$"
 
 
-@dataclass
-class _Chunk(InputPartition):
-    file: str
-    start: int
-    end: int  # exclusive byte offset; lines *starting* in [start, end) belong here
+def _between(line, before: str, after: str):
+    """The text between ``before`` and ``after`` in a line that matched
+    ``_LINE`` (its hex and digits hold neither): two substring searches,
+    far cheaper per line than extracting each field with the regex."""
+    return F.substring_index(F.substring_index(line, after, 1), before, -1)
 
 
-def _list_files(path: str) -> list[str]:
-    """Expand a file, directory, or glob into a sorted file list."""
-    if os.path.isdir(path):
-        return sorted(
-            os.path.join(path, f)
-            for f in os.listdir(path)
-            if not f.startswith((".", "_"))
+def load_scan_dump(spark, path: str, start=None, end=None):
+    """Open a reference scan dump (file, directory or glob) as a keyed KV
+    DataFrame; ``start``/``end`` are bytes or hex strings."""
+    try:
+        raw = spark.read.text(path)
+    except AnalysisException as e:
+        if e.getCondition() != "PATH_NOT_FOUND":
+            raise
+        raise FileNotFoundError(f"scan dump not found: {path}") from e
+    line = F.col("value")
+    cnt = _between(line, ", cnt:", ".").try_cast("bigint")
+    malformed = F.raise_error(
+        F.concat(
+            F.lit("malformed scan-dump line in "),
+            F.col("_metadata.file_path"),
+            F.lit(": "),
+            F.substring(line, 1, 80),
         )
-    if os.path.isfile(path):
-        return [path]
-    import glob as _glob
-
-    hits = sorted(f for f in _glob.glob(path) if os.path.isfile(f))
-    if not hits:
-        raise FileNotFoundError(f"scan dump not found: {path}")
-    return hits
-
-
-def _chunks(files: list[str], chunk_bytes: int) -> list[_Chunk]:
-    out = []
-    for f in files:
-        size = os.path.getsize(f)
-        if size == 0:
-            continue
-        off = 0
-        while off < size:
-            out.append(_Chunk(f, off, min(off + chunk_bytes, size)))
-            off += chunk_bytes
-    return out
-
-
-class ScanDumpReader(DataSourceReader):
-    def __init__(self, options):
-        self.path = options.get("path")
-        if not self.path:
-            raise ValueError("tikv_scandump requires .option('path', ...) or load(path)")
-        self.chunk_bytes = int(options.get("chunk_bytes", _DEFAULT_CHUNK))
-        # explicit range options (hex, reference config/config.go:32-33 style)
-        self.start_key = bytes.fromhex(options["start_key"]) if options.get("start_key") else None
-        self.end_key = bytes.fromhex(options["end_key"]) if options.get("end_key") else None
-
-    # -- range pushdown -----------------------------------------------------
-    def pushFilters(self, filters: List[Filter]) -> Iterable[Filter]:
-        """Absorb key-range comparisons; everything else stays in Spark.
-
-        Catalyst hands each comparison as (column-path, literal).  We accept
-        ``key >(=) lo`` and ``key <(=) hi`` with bytes-like literals, tighten
-        the reader's [start, end) window, and *don't* yield them back — the
-        plan's post-scan Filter drops them, which is the observable pushdown.
-        """
-        remaining = []
-        for f in filters:
-            b = self._as_key_bound(f)
-            if b is None:
-                remaining.append(f)
-                continue
-            kind, val = b
-            if kind == "ge":
-                if self.start_key is None or val > self.start_key:
-                    self.start_key = val
-            elif kind == "gt":  # key > v  ≡  key >= v ++ 0x00 (bytewise order)
-                nxt = val + b"\x00"
-                if self.start_key is None or nxt > self.start_key:
-                    self.start_key = nxt
-            elif kind == "lt":
-                if self.end_key is None or val < self.end_key:
-                    self.end_key = val
-            elif kind == "le":
-                nxt = val + b"\x00"
-                if self.end_key is None or nxt < self.end_key:
-                    self.end_key = nxt
-        return remaining
-
-    @staticmethod
-    def _as_key_bound(f: Filter):
-        if isinstance(f, Not):
-            return None
-        kind = {
-            GreaterThanOrEqual: "ge",
-            GreaterThan: "gt",
-            LessThan: "lt",
-            LessThanOrEqual: "le",
-        }.get(type(f))
-        if kind is None:
-            return None
-        if tuple(f.attribute) != ("key",):
-            return None
-        v = f.value
-        if isinstance(v, (bytes, bytearray)):
-            return kind, bytes(v)
-        return None
-
-    # -- planning -----------------------------------------------------------
-    def partitions(self):
-        return _chunks(_list_files(self.path), self.chunk_bytes)
-
-    # -- execution ----------------------------------------------------------
-    def read(self, part: _Chunk) -> Iterator[tuple]:
-        lo, hi = self.start_key, self.end_key
-        with open(part.file, "rb") as fh:
-            if part.start > 0:
-                # a line that *spans* the chunk start belongs to the previous
-                # chunk; skip to the first full line (text-split convention)
-                fh.seek(part.start - 1)
-                fh.readline()
-            while fh.tell() < part.end:
-                line = fh.readline()
-                if not line:
-                    break
-                m = _LINE.match(line)
-                if not m:
-                    if line.strip():
-                        raise ValueError(
-                            f"{part.file}: malformed scan-dump line: {line[:80]!r}"
-                        )
-                    continue
-                key = bytes.fromhex(m.group(1).decode("ascii"))
-                if lo is not None and key < lo:
-                    continue
-                if hi is not None and key >= hi:
-                    continue
-                yield (key, bytes.fromhex(m.group(2).decode("ascii")), int(m.group(3)))
-
-
-class ScanDumpDataSource(DataSource):
-    """``spark.read.format("tikv_scandump")`` — see module docstring."""
-
-    @classmethod
-    def name(cls) -> str:
-        return "tikv_scandump"
-
-    def schema(self) -> str:
-        return "key binary, value binary, cnt bigint"
-
-    def reader(self, schema) -> ScanDumpReader:
-        return ScanDumpReader(self.options)
-
-
-def register(spark) -> None:
-    """Idempotently register the source on a session.
-
-    The class is shipped to Python workers by *value* (this module depends
-    only on stdlib + pyspark), so the package need not be installed on
-    executors — same self-contained convention as the engine's UDF closures.
-    """
-    import sys
-
-    from pyspark import cloudpickle
-
-    cloudpickle.register_pickle_by_value(sys.modules[__name__])
-    spark.dataSource.register(ScanDumpDataSource)
-
-
-def load_scan_dump(spark, path: str, start=None, end=None, chunk_bytes: int | None = None):
-    """Open a reference scan dump as a keyed KV DataFrame with the range
-    applied at the reader (convenience over the raw format API)."""
-    register(spark)
-    r = spark.read.format("tikv_scandump").option("path", path)
+    )
+    df = (
+        raw.filter(~line.rlike(r"^\s*$"))
+        .filter(F.when(line.rlike(_LINE) & cnt.isNotNull(), True).otherwise(malformed))
+        .select(
+            F.unhex(_between(line, "key:", ", value:")).alias("key"),
+            F.unhex(_between(line, ", value:", ", cnt:")).alias("value"),
+            cnt.alias("cnt"),
+        )
+    )
     if start is not None:
-        r = r.option("start_key", start.hex() if isinstance(start, bytes) else str(start))
+        df = df.filter(F.col("key") >= F.lit(_key(start)))
     if end is not None:
-        r = r.option("end_key", end.hex() if isinstance(end, bytes) else str(end))
-    if chunk_bytes:
-        r = r.option("chunk_bytes", str(chunk_bytes))
-    return r.load()
+        df = df.filter(F.col("key") < F.lit(_key(end)))
+    return df
+
+
+def _key(k) -> bytes:
+    return bytes(k) if isinstance(k, (bytes, bytearray)) else bytes.fromhex(str(k))

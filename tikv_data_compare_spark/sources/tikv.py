@@ -250,7 +250,7 @@ def _make_client(options):
             "this environment); use sources.parquet for file-backed sources, "
             "or export the cluster with the reference's scan command and open "
             "the dump with sources.scandump.load_scan_dump (reads the "
-            "{NAME}_scan.log.<ts> format with range pushdown), or pass "
+            "{NAME}_scan.log.<ts> format with a key range), or pass "
             ".option('client', 'fake') / a module:factory adapter"
         ) from e
     from tikv_data_compare_spark.sources.tikv_live import LiveTikvClient
